@@ -71,11 +71,23 @@ object Ckpt {
       session.flatMap(_.conf.getOption(key))
         .orElse(sc.getConf.getOption(key))
         .map(_.trim).filter(_.nonEmpty)
-    def replicated: Boolean =
-      get("spark.graft.checkpoint.replicated").exists(java.lang.Boolean.parseBoolean)
-    def reliableDir: Option[String] = get("spark.graft.checkpoint.reliable")
-    def reliableEvery: Int =
-      math.max(1, get("spark.graft.checkpoint.reliable.every").map(_.toInt).getOrElse(1))
+    // every dial is parsed on every call, so a bad value fails on the first
+    // checkpoint, not only once its dial becomes the one in effect
+    val replicated: Boolean = get("spark.graft.checkpoint.replicated") match {
+      case None => false
+      case Some(v) => v.toLowerCase match {
+        case "true" => true
+        case "false" => false
+        case _ => throw new IllegalArgumentException(
+          s"spark.graft.checkpoint.replicated must be 'true' or 'false', got '$v'")
+      }
+    }
+    val reliableDir: Option[String] = get("spark.graft.checkpoint.reliable")
+    val reliableEvery: Int = get("spark.graft.checkpoint.reliable.every") match {
+      case None => 1
+      case Some(v) => v.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
+        s"spark.graft.checkpoint.reliable.every must be a positive integer, got '$v'"))
+    }
   }
 
   /** Per-call-site reliable-cadence counters. The site key is the nearest

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * combined, count mode).
   *
   * Profile synthesis bypasses the ALIGNER on purpose: alignment throughput
-  * is measured elsewhere (IngestRateProbe, 81 genomes/s end-to-end); this
+  * is measured elsewhere (the `ingest` workload of `perfbench/`); this
   * rehearsal isolates the QUERY side, whose inputs are store tables no
   * matter how they were produced.
   *

@@ -6269,10 +6269,10 @@ object PipelineQueries {
     // every round reads a flat checkpoint. The dial changes WHERE the
     // lineage is cut, never a value: the trajectory (argmax, tie-break,
     // merge application) is cadence-invariant, spec-pinned at 1 vs 4.
-    val ckptEvery = {
-      val v = s.conf.getOption("spark.graft.bpe.ckptEvery").map(_.toInt).getOrElse(4)
-      require(v >= 1, s"spark.graft.bpe.ckptEvery must be >= 1, got $v")
-      v
+    val ckptEvery = s.conf.getOption("spark.graft.bpe.ckptEvery") match {
+      case None => 4
+      case Some(v) => v.trim.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
+        s"spark.graft.bpe.ckptEvery must be a positive integer, got '$v'"))
     }
     var words = bpeWordTable(s, dir).lossTolerantCheckpoint()
     val out = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]

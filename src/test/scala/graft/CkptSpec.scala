@@ -115,4 +115,21 @@ class CkptSpec extends SparkSpec {
       spark.conf.unset("spark.graft.checkpoint.reliable.every")
     }
   }
+
+  test("a bad dial value fails naming its key") {
+    val dir = Files.createTempDirectory("relckpt-bad")
+    for ((key, value, extra) <- Seq(
+        ("spark.graft.checkpoint.replicated", "yes", None),
+        ("spark.graft.checkpoint.reliable.every", "abc", Some(dir.toString)))) {
+      extra.foreach(spark.conf.set("spark.graft.checkpoint.reliable", _))
+      spark.conf.set(key, value)
+      try {
+        val e = intercept[IllegalArgumentException](spark.range(10).toDF("v").lossTolerantCheckpoint())
+        assert(e.getMessage.contains(key) && e.getMessage.contains(value), e.getMessage)
+      } finally {
+        spark.conf.unset(key)
+        spark.conf.unset("spark.graft.checkpoint.reliable")
+      }
+    }
+  }
 }
