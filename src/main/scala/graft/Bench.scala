@@ -72,8 +72,7 @@ object Bench {
     // blocking=true: an async unpersist's removal work would land inside
     // the NEXT query's timed window (measured +0.6 s over 12 queries);
     // blocking puts the release in the untimed gap between queries.
-    val sweep = sys.env.getOrElse("SPARK_GRAFT_BENCH_SWEEP", "1") != "0"
-    def sweepBlocks(): Unit = if (sweep) {
+    def sweepBlocks(): Unit = {
       // clearCache drops CacheManager ENTRIES too (d4 persists its gram
       // set): without it the plan-match list grows across 142 queries and
       // every later .persist pays a scan over stale InMemoryRelations.
@@ -89,12 +88,11 @@ object Bench {
       // each query's session teardown does this implicitly.
       System.gc()
     }
-    // SPARK_GRAFT_BENCH_TRACE=1: name each query on stderr before running
-    // it — the only way to attribute a failure that kills the JVM outright
-    // (a task-thread OOM halts local mode via SparkUncaughtExceptionHandler
-    // before the per-query catch below can record anything).
-    val trace = sys.env.get("SPARK_GRAFT_BENCH_TRACE").contains("1")
-    def traced(name: String): Unit = if (trace) System.err.println(s"[bench] >> $name")
+    // Name each query on stderr before running it — the only way to
+    // attribute a failure that kills the JVM outright (a task-thread OOM
+    // halts local mode via SparkUncaughtExceptionHandler before the
+    // per-query catch below can record anything).
+    def traced(name: String): Unit = System.err.println(s"[bench] >> $name")
     // Untimed warm-up pass: first execution of each plan pays one-time JVM
     // costs (encoder/codegen Janino compilation, JIT) that a long-running
     // cluster amortizes to zero; the timed pass below measures steady-state
@@ -110,13 +108,16 @@ object Bench {
     }
     // Two timed passes, per-query minimum: a single pass is subject to GC
     // pauses and stats-collection jitter; the min of two is the steady-state
-    // number a long-running cluster sees.
-    def timedPass(): Map[String, Double] = queries.map { case (name, fn) =>
+    // number a long-running cluster sees. Each timed run's jobs carry the
+    // job group "<query>#<pass>", so the sidecar can report the task
+    // metrics of exactly the run whose time is reported.
+    val totals = TaskTotals.attach(spark.sparkContext)
+    def timedPass(pass: Int): Map[String, Double] = queries.map { case (name, fn) =>
       traced(name)
       if (errors.contains(name)) name -> -1.0
       else {
         val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true } catch {
+        val ok = try { totals.within(s"$name#$pass")(fn(spark, sfDir).count()); true } catch {
           case e: Throwable =>
             errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
               .linesIterator.take(1).mkString.take(200)
@@ -127,8 +128,8 @@ object Bench {
         name -> (if (ok) dt else -1.0)
       }
     }
-    val first = timedPass()
-    val second = timedPass()
+    val first = timedPass(1)
+    val second = timedPass(2)
     val results = first.map { case (k, v) =>
       k -> (if (errors.contains(k)) -1.0 else math.min(v, second(k)))
     }
@@ -168,6 +169,22 @@ object Bench {
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), line + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] write $out: $e") }
+    // Per-query task metrics go to a sidecar next to it, one entry per
+    // query for the timed pass whose time the line reports, so the
+    // one-line artifact keeps its keys. The listener is settled once here,
+    // never between timed queries.
+    totals.settle()
+    val metricsOut = out.stripSuffix(".json") + "_metrics.json"
+    val perQuery = results.map { case (k, v) =>
+      val pass = if (v >= 0 && second(k) < first(k)) 2 else 1
+      s"""${Json.str(k)}:{"sec":${if (v < 0) "-1" else f"$v%.3f"},"pass":$pass,""" +
+        totals(s"$k#$pass").jsonFields + "}"
+    }.mkString("{\n", ",\n", "\n}")
+    val metrics =
+      s"""{"master":${Json.str(s"local[$cpus]")},"sf":${Json.str(sfDir)},""" +
+      s""""queries":$perQuery}"""
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get(metricsOut), metrics + "\n")
+    catch { case e: Throwable => System.err.println(s"[bench] write $metricsOut: $e") }
     if (errors.nonEmpty)
       System.err.println(s"[bench] ${errors.size} queries FAILED: ${errors.keys.mkString(", ")}")
     // The JSON line goes out LAST, after spark.stop(): anything printed

@@ -22,9 +22,9 @@ import org.apache.spark.storage.StorageLevel
   *     SINGLE executor loss degrades to a replica read. Cost: one network
   *     copy per checkpointed partition — and a MEASURED SCOPE LIMIT: this
   *     rung is for node-sized state (rank vectors, cluster labels), not
-  *     fact-table-wide checkpoints. CkptPricingRehearsal at sf1 on
-  *     local-cluster[3,2,*]: replicating g1's 11.7M-row edge-list
-  *     checkpoint OOM-killed executors at every heap size tried (2–16
+  *     fact-table-wide checkpoints. Priced at sf1 on local-cluster[3,2,*]
+  *     (SCALING.md, "the fault-domain ladder's price"): replicating g1's
+  *     11.7M-row edge-list checkpoint OOM-killed executors at every heap size tried (2–16
   *     GiB), deserialized and serialized storage alike, on a clean block
   *     store — while the SAME query under `reliable every=N` completes at
   *     a 20-33% wall premium at every cadence. SER (not plain _2) is kept
@@ -73,21 +73,9 @@ object Ckpt {
         .map(_.trim).filter(_.nonEmpty)
     // every dial is parsed on every call, so a bad value fails on the first
     // checkpoint, not only once its dial becomes the one in effect
-    val replicated: Boolean = get("spark.graft.checkpoint.replicated") match {
-      case None => false
-      case Some(v) => v.toLowerCase match {
-        case "true" => true
-        case "false" => false
-        case _ => throw new IllegalArgumentException(
-          s"spark.graft.checkpoint.replicated must be 'true' or 'false', got '$v'")
-      }
-    }
+    val replicated: Boolean = ConfValue.bool(get, "spark.graft.checkpoint.replicated", false)
     val reliableDir: Option[String] = get("spark.graft.checkpoint.reliable")
-    val reliableEvery: Int = get("spark.graft.checkpoint.reliable.every") match {
-      case None => 1
-      case Some(v) => v.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
-        s"spark.graft.checkpoint.reliable.every must be a positive integer, got '$v'"))
-    }
+    val reliableEvery: Int = ConfValue.int(get, "spark.graft.checkpoint.reliable.every", 1, min = 1)
   }
 
   /** Per-call-site reliable-cadence counters. The site key is the nearest
@@ -122,13 +110,6 @@ object Ckpt {
       site
     }
   }
-
-  /** Reset every site's cadence counter — rehearsal/pricing plumbing so
-    * back-to-back measured runs in one driver JVM each start at "first
-    * call durable" instead of inheriting the previous run's phase. Never
-    * needed for correctness (any phase is safe); only for comparability.
-    */
-  private[graft] def resetCadence(): Unit = siteCalls.clear()
 
   /** True iff this call at this site should be a DURABLE checkpoint: the
     * site's first call always is (every chain starts from a durable

@@ -63,16 +63,7 @@ object DatePartitionProbe {
       .repartition(col("month"))
       .write.partitionBy("month").parquet(partDir)
 
-    val bytes = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null) bytes.addAndGet(e.taskMetrics.inputMetrics.bytesRead)
-    })
-    def settle(): Long = {
-      var prev = -1L; var cur = bytes.get
-      while (cur != prev) { Thread.sleep(200); prev = cur; cur = bytes.get }
-      cur
-    }
+    val meter = graft.TaskTotals.attach(spark.sparkContext)
 
     // the reference's commonest surveillance shape: a season + a lab
     val (d0, d1) = ("2020-06-01", "2020-08-31")
@@ -80,16 +71,17 @@ object DatePartitionProbe {
 
     def timed(label: String, df: org.apache.spark.sql.DataFrame): (Long, Double, Long) = {
       df.count() // warm
-      def once(): (Long, Double, Long) = {
-        val b0 = settle(); val t = System.nanoTime()
-        val rows = df.count()
-        val s = (System.nanoTime() - t) / 1e9
-        (rows, s, settle() - b0)
+      def once(run: Int): (Long, Double) = {
+        val t = System.nanoTime()
+        val rows = meter.within(s"$label#$run")(df.count())
+        (rows, (System.nanoTime() - t) / 1e9)
       }
-      val (r1, s1, b1) = once(); val (r2, s2, b2) = once()
+      val (r1, s1) = once(1); val (r2, s2) = once(2)
       require(r1 == r2)
-      println(f"$label%-12s rows=$r1%9d  wall ${math.min(s1, s2)}%6.2f s  read ${math.min(b1, b2) / 1e6}%8.1f MB")
-      (r1, math.min(s1, s2), math.min(b1, b2))
+      meter.settle()
+      val b = math.min(meter(s"$label#1").inputBytes, meter(s"$label#2").inputBytes)
+      println(f"$label%-12s rows=$r1%9d  wall ${math.min(s1, s2)}%6.2f s  read ${b / 1e6}%8.1f MB")
+      (r1, math.min(s1, s2), b)
     }
 
     val flat = timed("flat", spark.read.parquet(flatDir).filter(datePred))

@@ -55,23 +55,6 @@ object MatchClusterRehearsal {
       name -> ((n, if (n == 0) "empty" else s"${agg.getDecimal(1)}:${agg.getDecimal(2)}"))
     }.toMap
 
-  private final class TaskBytes extends org.apache.spark.scheduler.SparkListener {
-    val input = new java.util.concurrent.atomic.AtomicLong
-    val shuffle = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-      if (e.taskMetrics != null) {
-        input.addAndGet(e.taskMetrics.inputMetrics.bytesRead)
-        shuffle.addAndGet(e.taskMetrics.shuffleReadMetrics.totalBytesRead +
-          e.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      }
-    /** listener events are async — poll both counters to stability */
-    def settle(): (Long, Long) = {
-      var prev = (-1L, -1L); var cur = (input.get, shuffle.get)
-      while (cur != prev) { Thread.sleep(200); prev = cur; cur = (input.get, shuffle.get) }
-      cur
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(1000000L)
     val memMb = args.lift(1).map(_.toInt).getOrElse(2048)
@@ -160,20 +143,19 @@ object MatchClusterRehearsal {
       require(carriers > SonarStore.CarrierPushdownCap,
         s"mid-band probe $midToken resolved $carriers carriers — not in the " +
           s"semi-join band; the measurement would be vacuous")
-      val meter = new TaskBytes
-      cluster.sparkContext.addSparkListener(meter)
+      val meter = graft.TaskTotals.attach(cluster.sparkContext)
       def timed(label: String): (Double, Long, Long) = {
         SonarMatch.matchGenomes(store, midArgs).count() // warm
-        def once(): (Double, Long, Long) = {
-          val (i0, s0) = meter.settle()
+        def once(run: Int): Double = {
           val t = System.nanoTime()
-          SonarMatch.matchGenomes(store, midArgs).count()
-          val w = (System.nanoTime() - t) / 1e9
-          val (i1, s1) = meter.settle()
-          (w, i1 - i0, s1 - s0)
+          meter.within(s"$label#$run")(SonarMatch.matchGenomes(store, midArgs).count())
+          (System.nanoTime() - t) / 1e9
         }
-        val (w1, i1, sh1) = once(); val (w2, i2, sh2) = once()
-        val r = (math.min(w1, w2), math.min(i1, i2), math.min(sh1, sh2))
+        val w = math.min(once(1), once(2))
+        meter.settle()
+        val runs = Seq(meter(s"$label#1"), meter(s"$label#2"))
+        val r = (w, runs.map(_.inputBytes).min,
+          runs.map(m => m.shuffleReadBytes + m.shuffleWriteBytes).min)
         println(f"MIDBAND $label%-9s carriers=$carriers wall ${r._1}%6.2f s  " +
           f"input ${r._2 / 1e6}%8.1f MB  shuffle ${r._3 / 1e6}%8.1f MB")
         r

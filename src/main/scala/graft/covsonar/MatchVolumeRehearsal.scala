@@ -161,39 +161,30 @@ object MatchVolumeRehearsal {
     val shapes = goldenShapes
     val common = pool(2)
 
-    // scan-volume accounting: task input bytes, settled (listener events are
-    // async) by polling the counter to stability between measurements
-    val bytesRead = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null) bytesRead.addAndGet(e.taskMetrics.inputMetrics.bytesRead)
-    })
-    def settle(): Long = {
-      var prev = -1L; var cur = bytesRead.get
-      while (cur != prev) { Thread.sleep(200); prev = cur; cur = bytesRead.get }
-      cur
-    }
+    // scan-volume accounting: task input bytes per measured run
+    val meter = graft.TaskTotals.attach(spark.sparkContext)
 
     def runShapes(label: String): Map[String, (Long, Double, Long)] = {
       // untimed warm pass: equalize page-cache / writeback state across
       // phases (the phase right after OPTIMIZE otherwise pays the rewrite's
       // cold cache and its timings under-credit the indexed plans)
       shapes.foreach { case (_, margs) => SonarMatch.matchGenomes(store, margs).count() }
-      shapes.map { case (name, margs) =>
-        def once(): (Long, Double, Long) = {
-          val b0 = settle()
+      val timings = shapes.map { case (name, margs) =>
+        def once(run: Int): (Long, Double) = {
           val t = System.nanoTime()
-          val rows = SonarMatch.matchGenomes(store, margs).count()
-          val s = (System.nanoTime() - t) / 1e9
-          (rows, s, settle() - b0)
+          val rows = meter.within(s"$label/$name#$run")(SonarMatch.matchGenomes(store, margs).count())
+          (rows, (System.nanoTime() - t) / 1e9)
         }
-        val (rows1, s1, b1) = once()
-        val (rows2, s2, b2) = once()
+        val (rows1, s1) = once(1)
+        val (rows2, s2) = once(2)
         require(rows1 == rows2)
-        val s = math.min(s1, s2)
-        val b = math.min(b1, b2)
-        println(f"$label $name%-18s $rows1%12d $s%10.2f ${nGenomes / s}%12.0f ${b / 1e6}%10.1f MB")
-        name -> ((rows1, s, b))
+        (name, rows1, math.min(s1, s2))
+      }
+      meter.settle()
+      timings.map { case (name, rows, s) =>
+        val b = math.min(meter(s"$label/$name#1").inputBytes, meter(s"$label/$name#2").inputBytes)
+        println(f"$label $name%-18s $rows%12d $s%10.2f ${nGenomes / s}%12.0f ${b / 1e6}%10.1f MB")
+        name -> ((rows, s, b))
       }.toMap
     }
 

@@ -135,10 +135,13 @@ object Reference {
   /** Bundled pango lineage → comma-joined sublineages map (lineage.all.tsv,
     * built by the reference's Lineages_UPDATER; "none" marks a leaf).
     */
-  lazy val lineageSublineages: Map[String, String] = {
-    readResource("/covsonar/lineage.all.tsv").linesIterator.drop(1).flatMap { line =>
+  lazy val lineageSublineages: Map[String, String] =
+    parseLineageTsv(readResource("/covsonar/lineage.all.tsv"))
+
+  /** `lineage\tsublineages` rows after a header line; short rows are skipped. */
+  def parseLineageTsv(text: String): Map[String, String] =
+    text.linesIterator.drop(1).flatMap { line =>
       val f = line.split("\t")
       if (f.length >= 2) Some(f(0) -> f(1)) else None
     }.toMap
-  }
 }

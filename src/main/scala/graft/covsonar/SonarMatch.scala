@@ -233,13 +233,9 @@ object SonarMatch {
     */
   def lineageMapFor(store: SonarStore): Map[String, String] = {
     val p = java.nio.file.Paths.get(store.dir, "lineage.all.tsv")
-    if (java.nio.file.Files.isRegularFile(p)) {
-      val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-      text.linesIterator.drop(1).flatMap { line =>
-        val f = line.split("\t")
-        if (f.length >= 2) Some(f(0) -> f(1)) else None
-      }.toMap
-    } else Reference.lineageSublineages
+    if (java.nio.file.Files.isRegularFile(p))
+      Reference.parseLineageTsv(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+    else Reference.lineageSublineages
   }
 
   /** `--with-sublineage` worklist closure over the bundled lineage map
@@ -359,11 +355,10 @@ object SonarMatch {
     // over that slice instead of scanning every profile row; the predicate
     // conjunction below is applied unchanged on top, so results are
     // byte-identical with the index on, stale, or absent.
-    val carrierCap = store.spark.conf
-      .getOption("spark.graft.match.carrierCap").map(_.toInt)
-      .getOrElse(SonarStore.CarrierPlanCap)
-    val indexOn = store.spark.conf
-      .getOption("spark.graft.match.tokenIndex").forall(_.trim.toBoolean)
+    val conf = store.spark.conf
+    val carrierCap = graft.ConfValue.int(conf.getOption, "spark.graft.match.carrierCap",
+      SonarStore.CarrierPlanCap, min = 0)
+    val indexOn = graft.ConfValue.bool(conf.getOption, "spark.graft.match.tokenIndex", true)
     val base =
       (if (indexOn && includeGroups.nonEmpty)
         TokenIndex.carrierSuperset(store, includeGroups, carrierCap)

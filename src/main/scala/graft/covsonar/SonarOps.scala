@@ -23,16 +23,30 @@ final case class InfoReport(
 object SonarOps {
 
   /** Membership predicate that stays scalable for file-sized lists: short
-    * lists become an `isin` (which pushes down to the parquet scan), long
-    * ones a semi/anti join against a broadcast DataFrame — a giant In
-    * literal would blow up Catalyst analysis and codegen, and between the
-    * pushdown cap and ~1000 values the pushed filter degrades to a vacuous
-    * min/max range whose filtered read path MEASURED more bytes than a
-    * plain scan (see SonarStore.essenceForSeqhashes).
+    * lists become an `isin`, which pushes into the parquet scan (range-
+    * clustered row groups + sized blooms skip granules holding no listed
+    * value); long ones a semi/anti join against a broadcast DataFrame. A
+    * giant In literal would blow up Catalyst analysis and codegen, and
+    * between the pushdown cap and ~1000 values the pushed filter degrades
+    * to a vacuous min/max range (random hashes span everything) whose
+    * filtered read path MEASURED 5× the bytes of a plain scan.
     */
   private[covsonar] def filterByList(
       df: DataFrame, field: String, values: Seq[String], negate: Boolean = false): DataFrame =
     if (values.size <= SonarStore.CarrierPushdownCap) {
+      // The pushed IN must arrive at parquet as an In filter: above
+      // `spark.sql.parquet.pushdown.inFilterThreshold` (default 10) it
+      // degrades to a min/max range, vacuous for hash keys. Raised here,
+      // where the filtered plan is built — and deliberately as a
+      // SESSION-level setting (Spark reads it at scan planning, which
+      // happens lazily at action time, so a set-and-restore around this
+      // builder would be a race). It only changes pushdown shape, never
+      // results, and 512-value INs stay ≥2× under the parquet filter
+      // visitor's measured stack bound.
+      val spark = df.sparkSession
+      val th = "spark.sql.parquet.pushdown.inFilterThreshold"
+      if (spark.conf.get(th, "10").toInt < SonarStore.CarrierPushdownCap)
+        spark.conf.set(th, SonarStore.CarrierPushdownCap.toString)
       val c = col(field).isin(values: _*)
       df.filter(if (negate) !c else c)
     } else {

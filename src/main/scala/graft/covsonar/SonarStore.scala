@@ -127,45 +127,18 @@ final class SonarStore(val spark: SparkSession, val dir: String) {
       .select(essenceColumns.map(col): _*)
 
   /** essence restricted to a known carrier-seqhash superset (the token-index
-    * pruned match path — see [[TokenIndex]]). The IN predicate lands on BOTH
-    * scan sides, where it pushes into parquet (row-group bloom / min-max /
-    * page-index skipping); the join then runs over the carrier slice only,
-    * which AQE turns into a broadcast at any realistic carrier cap.
+    * pruned match path — see [[TokenIndex]]). Both scan sides are filtered
+    * by [[SonarOps.filterByList]]: up to the pushdown cap an IN predicate
+    * that pushes into parquet (row-group bloom / min-max / page-index
+    * skipping), above it a broadcast semi-join. The join then runs over the
+    * carrier slice only, which AQE turns into a broadcast at any realistic
+    * carrier cap.
     */
   def essenceForSeqhashes(seqhashes: Seq[String]): DataFrame =
     if (seqhashes.isEmpty) essence.filter(lit(false)) // folds to an empty LocalRelation
-    else if (seqhashes.size <= SonarStore.CarrierPushdownCap) {
-      // The pushed IN must arrive at parquet as an In filter: above
-      // `spark.sql.parquet.pushdown.inFilterThreshold` (default 10) it
-      // degrades to a min/max range, vacuous for hash keys. Raised here,
-      // at the point the pruned plan is built, NOT in the constructor —
-      // and deliberately as a SESSION-level setting (Spark reads it at
-      // scan planning, which happens lazily at action time, so a
-      // set-and-restore around this builder would be a race). It only
-      // changes pushdown shape, never results, and 512-value INs stay
-      // ≥2× under the parquet filter visitor's measured stack bound.
-      val th = "spark.sql.parquet.pushdown.inFilterThreshold"
-      if (spark.conf.get(th, "10").toInt < SonarStore.CarrierPushdownCap)
-        spark.conf.set(th, SonarStore.CarrierPushdownCap.toString)
-      // small set: IN literals push into both parquet scans, where range-
-      // clustered row groups + sized blooms skip carrier-free granules
-      val p = col("seqhash").isin(seqhashes: _*)
-      table("genome").filter(p).join(table("profile").filter(p), Seq("seqhash"), "left")
-        .select(essenceColumns.map(col): _*)
-    } else {
-      // mid-size set: a pushed IN would fall back to a vacuous min/max
-      // range (random hashes span everything) that MEASURED 5× the bytes
-      // of an unfiltered scan (the filtered read path re-reads pages it
-      // can't skip); a broadcast semi-join keeps the scan plain and the
-      // filter a hash probe
-      val spark = this.spark
-      import spark.implicits._
-      val carriers = broadcast(seqhashes.toDF("seqhash"))
-      table("genome").join(carriers, Seq("seqhash"), "left_semi")
-        .join(table("profile").join(carriers, Seq("seqhash"), "left_semi"),
-          Seq("seqhash"), "left")
-        .select(essenceColumns.map(col): _*)
-    }
+    else SonarOps.filterByList(table("genome"), "seqhash", seqhashes)
+      .join(SonarOps.filterByList(table("profile"), "seqhash", seqhashes), Seq("seqhash"), "left")
+      .select(essenceColumns.map(col): _*)
 
   /** dna_view = genome ⟕ sequence2dna ⟕ dna (lib/db.sqlite:125-155). */
   def dnaView: DataFrame =

@@ -838,12 +838,6 @@ object PipelineQueries {
   def d4cJaccardBanded(s: SparkSession, dir: String): DataFrame =
     d4cCore(s, heapsViewDocs(s, dir))
 
-  /** Rehearsal hook: d4c over a raw documents table (the vocab-salted
-    * ScaleUp corpora) without the query-side Heaps view.
-    */
-  private[graft] def d4cRaw(s: SparkSession, dir: String): DataFrame =
-    d4cCore(s, t(s, dir, "documents").select(col("doc_id"), col("lang"), col("text")))
-
   /** Plan-inspection probes: the same frames WITHOUT the eager result
     * checkpoint, so PlanQualitySpec's no-product asserts see the real
     * join structure instead of a checkpoint scan.
@@ -872,21 +866,9 @@ object PipelineQueries {
     * cut runs through limit().
     */
   private[queries] val D4cStopGramBudgetDefault: Long = 1L << 24
-  private[queries] def d4cStopGramBudget(s: SparkSession): Long = {
-    val v: Long = s.conf.getOption("spark.graft.d4c.stopGramBudget") match {
-      case None => D4cStopGramBudgetDefault
-      case Some(x) =>
-        try x.toLong
-        catch { case _: NumberFormatException =>
-          throw new IllegalArgumentException(
-            s"spark.graft.d4c.stopGramBudget must be a plain positive " +
-              s"integer (no 1e7 notation), got '$x'")
-        }
-    }
-    require(v >= 2 && v <= Int.MaxValue.toLong,
-      s"spark.graft.d4c.stopGramBudget must be in [2, ${Int.MaxValue}], got $v")
-    v
-  }
+  private[queries] def d4cStopGramBudget(s: SparkSession): Long =
+    graft.ConfValue.long(s.conf.getOption, "spark.graft.d4c.stopGramBudget",
+      D4cStopGramBudgetDefault, min = 2, max = Int.MaxValue.toLong)
 
   private[queries] def d4cCore(s: SparkSession, docs: DataFrame,
       materialize: Boolean = true): DataFrame = {
@@ -1682,21 +1664,13 @@ object PipelineQueries {
     */
   private[queries] val D6DriverEdgeThresholdDefault: Int = 2000000
   private[queries] def d6DriverEdgeThreshold(s: SparkSession): Int = {
-    val v: Long = s.conf.getOption("spark.graft.d6.driverEdgeThreshold") match {
-      case None => D6DriverEdgeThresholdDefault.toLong
-      case Some(x) =>
-        try x.toLong
-        catch { case _: NumberFormatException =>
-          throw new IllegalArgumentException(
-            s"spark.graft.d6.driverEdgeThreshold must be a plain non-negative " +
-              s"integer (no 3e6 notation), got '$x'")
-        }
-    }
-    require(v >= 0, s"spark.graft.d6.driverEdgeThreshold must be >= 0, got $v")
+    val v = graft.ConfValue.long(s.conf.getOption, "spark.graft.d6.driverEdgeThreshold",
+      D6DriverEdgeThresholdDefault.toLong, min = 0)
     // the probe runs limit(threshold + 1); larger settings just mean
     // "always take the driver path up to Int.MaxValue-1 probed edges"
     math.min(v, (Int.MaxValue - 1).toLong).toInt
   }
+
 
   private[queries] def d6Impl(
       s: SparkSession, dir: String, forceDistributed: Boolean): DataFrame = {
@@ -6269,11 +6243,7 @@ object PipelineQueries {
     // every round reads a flat checkpoint. The dial changes WHERE the
     // lineage is cut, never a value: the trajectory (argmax, tie-break,
     // merge application) is cadence-invariant, spec-pinned at 1 vs 4.
-    val ckptEvery = s.conf.getOption("spark.graft.bpe.ckptEvery") match {
-      case None => 4
-      case Some(v) => v.trim.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
-        s"spark.graft.bpe.ckptEvery must be a positive integer, got '$v'"))
-    }
+    val ckptEvery = graft.ConfValue.int(s.conf.getOption, "spark.graft.bpe.ckptEvery", 4, min = 1)
     var words = bpeWordTable(s, dir).lossTolerantCheckpoint()
     val out = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
     var r = 1

@@ -161,6 +161,30 @@ class TokenIndexSpec extends SparkSpec {
     assert(scansWithIn >= 2, s"expected carrier IN pushed to genome AND profile scans:\n$plan")
   }
 
+  test("a bad spark.graft.match.carrierCap fails naming the key") {
+    val store = buildStore()
+    for (bad <- Seq("abc", "-1")) {
+      spark.conf.set("spark.graft.match.carrierCap", bad)
+      try {
+        val e = intercept[IllegalArgumentException](
+          SonarMatch.matchGenomes(store, MatchArgs(profiles = Seq(Seq(Rare)))))
+        assert(e.getMessage.contains("spark.graft.match.carrierCap") && e.getMessage.contains(bad),
+          e.getMessage)
+      } finally spark.conf.unset("spark.graft.match.carrierCap")
+    }
+  }
+
+  test("a bad spark.graft.match.tokenIndex fails naming the key") {
+    val store = buildStore()
+    spark.conf.set("spark.graft.match.tokenIndex", "yes")
+    try {
+      val e = intercept[IllegalArgumentException](
+        SonarMatch.matchGenomes(store, MatchArgs(profiles = Seq(Seq(Rare)))))
+      assert(e.getMessage.contains("spark.graft.match.tokenIndex") && e.getMessage.contains("yes"),
+        e.getMessage)
+    } finally spark.conf.unset("spark.graft.match.tokenIndex")
+  }
+
   test("property fuzz: carrier superset ⊇ true matching seqhashes for random groups") {
     // the load-bearing invariant: for ANY include-group structure (AND
     // groups, N/X search_all flips, ambiguity expansions, absent tokens),
