@@ -8,7 +8,7 @@ import graft.SparkSpec
   */
 class FastaSourceSpec extends SparkSpec {
 
-  private val fixtures = "/root/reference/test"
+  private val fixtures = Fixtures.dir
 
   test("xz-compressed FASTA reads identically to its plain copy (S2)") {
     val plain = SonarIngest.readFasta(spark, s"$fixtures/test2.fasta")

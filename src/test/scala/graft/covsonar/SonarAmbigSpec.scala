@@ -46,7 +46,7 @@ class SonarAmbigSpec extends SparkSpec {
 
   private lazy val store = {
     val s = new SonarStore(spark, Files.createTempDirectory("sonar-ambig").toString)
-    SonarIngest.add(s, SonarIngest.readFasta(spark, "/root/reference/test/test.fasta"))
+    SonarIngest.add(s, SonarIngest.readFasta(spark, s"${Fixtures.dir}/test.fasta"))
     s
   }
 

@@ -59,7 +59,7 @@ class SonarCliSpec extends SparkSpec {
   }
 
   test("add + match --count + empty-match notice") {
-    val (_, addErr) = cli("add", "--db", db, "-f", "/root/reference/test/test.fasta")
+    val (_, addErr) = cli("add", "--db", db, "-f", s"${Fixtures.dir}/test.fasta")
     assert(addErr.contains("3 genome(s) added"))
     val (n, _) = cli("match", "--db", db, "--count")
     assert(n.trim == "3")
@@ -126,7 +126,7 @@ class SonarCliSpec extends SparkSpec {
 
   test("db-upgrade migrates a v3 store to v4 (migrate/4.sql analog)") {
     val db3 = Files.createTempDirectory("sonar-v3").toString
-    cli("add", "--db", db3, "-f", "/root/reference/test/test.fasta")
+    cli("add", "--db", db3, "-f", s"${Fixtures.dir}/test.fasta")
     // strip the store back to v3 shape: genome without submission_date
     val store = new SonarStore(spark, db3)
     val tmp = s"$db3/.g3"

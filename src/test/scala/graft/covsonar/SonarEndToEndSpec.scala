@@ -15,7 +15,7 @@ import org.apache.spark.sql.DataFrame
   */
 class SonarEndToEndSpec extends SparkSpec {
 
-  private val fixtures = "/root/reference/test"
+  private val fixtures = Fixtures.dir
   private lazy val storeDir =
     Files.createTempDirectory("sonar-e2e").toString
   private lazy val store = new SonarStore(spark, storeDir)

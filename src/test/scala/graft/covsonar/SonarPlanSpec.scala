@@ -13,7 +13,7 @@ class SonarPlanSpec extends SparkSpec {
 
   private lazy val store = {
     val s = new SonarStore(spark, Files.createTempDirectory("sonar-plan").toString)
-    SonarIngest.add(s, SonarIngest.readFasta(spark, "/root/reference/test/test.fasta"))
+    SonarIngest.add(s, SonarIngest.readFasta(spark, s"${Fixtures.dir}/test.fasta"))
     s
   }
 

@@ -9,7 +9,7 @@ import graft.SparkSpec
   */
 class SonarStreamIngestSpec extends SparkSpec {
 
-  private val fixtures = "/root/reference/test"
+  private val fixtures = Fixtures.dir
 
   test("streaming ingest drains a watch dir through the batch add pipeline") {
     val root = Files.createTempDirectory("sonar-stream")

@@ -11,7 +11,7 @@ class SonarVcfSpec extends SparkSpec {
 
   private lazy val store = {
     val s = new SonarStore(spark, Files.createTempDirectory("sonar-vcf").toString)
-    SonarIngest.add(s, SonarIngest.readFasta(spark, "/root/reference/test/test.fasta"))
+    SonarIngest.add(s, SonarIngest.readFasta(spark, s"${Fixtures.dir}/test.fasta"))
     // two synthetic genomes differing from the reference at one shared site
     // (position 5001 0-based: ref 'G') → multi-allelic VCF row
     val ref = Reference.sarsCov2.refSeq
