@@ -216,11 +216,12 @@ object MatchVolumeRehearsal {
     }
 
     // plan audit: the pruned flagship must push the carrier IN-list into
-    // both scans and broadcast the carrier slice
+    // both scans and broadcast the carrier slice (a one-carrier list
+    // reaches the scan as an equality: OptimizeIn rewrites a 1-value IN)
     val prunedPlan = SonarMatch.matchGenomes(store,
         MatchArgs(profiles = Seq(Seq(Marker)))).queryExecution.executedPlan.toString
     println(s"PLAN pruned: inPushdown=${prunedPlan.linesIterator.count(l =>
-      l.contains("PushedFilters") && l.contains("In(seqhash"))} " +
+      l.contains("PushedFilters") && (l.contains("In(seqhash") || l.contains("EqualTo(seqhash")))} " +
       s"broadcast=${prunedPlan.contains("BroadcastHashJoin")}")
 
     // plan audit for the full-scan flagship: the profile predicate must

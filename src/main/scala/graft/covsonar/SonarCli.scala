@@ -21,7 +21,7 @@ object SonarCli {
     val spark = SparkSession.builder()
       .appName("covsonarspark")
       .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+        sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     try run(spark, args.toSeq, System.out, System.err)

@@ -1020,11 +1020,10 @@ object PipelineQueries {
     // lang agreement is enforced at verify (a cross-lang band collision is
     // dropped there — cheaper than widening every band key)
     val cand = bandCandidates(bandTab, saltThreshold = 4096L)
-    // single-gather verify (see [[gatherPairGrams]]): one pass over the
-    // gram table replaces the former sequential join-by-doc_a-then-doc_b,
-    // whose second join re-exchanged both the (pair, ga) intermediate and
-    // the gram table; the lang-agreement filter lives inside the gather
-    val out = gatherPairGrams(cand, g)
+    val out = cand
+      .join(g.select(col("doc_id").as("doc_a"), col("lang"), col("g").as("ga")), Seq("doc_a"))
+      .join(g.select(col("doc_id").as("doc_b"), col("lang").as("lang_b"), col("g").as("gb")), Seq("doc_b"))
+      .filter(col("lang") === col("lang_b"))
       // packedGrams emits sorted distinct arrays, so the intersection
       // CARDINALITY (all the Jaccard needs) comes from the two-pointer
       // kernel — no per-pair hash set, no materialized intersection array
@@ -1045,43 +1044,6 @@ object PipelineQueries {
       res
     }
   }
-
-  /** Verify-stage gram GATHER (guide §2.4/§2.3): attach each candidate
-    * pair's TWO gram sets with ONE pass over the gram table instead of two
-    * sequential joins (by doc_a, then by doc_b). The pair explodes to two
-    * (doc_id → pair) rows, joins `g` once, and regroups by pair — so at
-    * scale the gram table is exchanged (or broadcast-built) ONCE, and the
-    * only array-bearing exchange after the join carries exactly the
-    * matched grams (2 rows/pair), where the sequential form re-exchanged
-    * the (pair, ga) intermediate AND the gram table a second time.
-    *
-    * Exactness (this stage is exactness-critical — d4/d4b/d4c's verified
-    * Jaccard runs over its output): a pair survives iff BOTH doc ids match
-    * a gram row (`size(sg) = 2` ≡ the two inner joins; `g` holds one row
-    * per doc and candidates have doc_a < doc_b, so the two collected
-    * entries are exactly one per side) and both docs share `lang` (the
-    * sequential form's lang filter; for prefix-path candidates the langs
-    * are equal by construction and the filter is a no-op). The collected
-    * pair is ordered by the side tag, so `ga` is always doc_a's grams.
-    * Pinned by the d4b brute-force parity spec and the d4c ⊆ d4b
-    * soundness spec, plus a dedicated gather-vs-sequential-join parity
-    * test.
-    */
-  private[queries] def gatherPairGrams(cand: DataFrame, g: DataFrame): DataFrame =
-    cand
-      .select(col("doc_a"), col("doc_b"),
-        explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
-      .join(g.select(col("doc_id"), col("lang"), col("g")), Seq("doc_id"))
-      .groupBy("doc_a", "doc_b")
-      // collect_list → ObjectHashAggregate (hash-based, no partition sort);
-      // array_sort on the 2-element list makes the side order deterministic
-      .agg(array_sort(collect_list(struct(
-        (col("doc_id") === col("doc_b")).cast("int").as("s"),
-        col("lang").as("lang"), col("g").as("g")))).as("sg"))
-      .filter(size(col("sg")) === 2 &&
-        col("sg")(0)("lang") === col("sg")(1)("lang"))
-      .select(col("doc_a"), col("doc_b"), col("sg")(0)("lang").as("lang"),
-        col("sg")(0)("g").as("ga"), col("sg")(1)("g").as("gb"))
 
   /** A Heaps-law view of `documents`, identical in Spark and DuckDB: every
     * word type gets an 8-char content-class-keyed salt suffix, and every
@@ -1507,12 +1469,9 @@ object PipelineQueries {
             least(col("na") - col("ra"), col("nb") - col("rb")) >= alphaNeeded)
           .select("lang", "doc_a", "doc_b"),
         col("doc_a"), col("doc_b")).distinct()
-    // single-gather verify (see [[gatherPairGrams]]): the gram table is
-    // joined ONCE (explode pair → two id rows, regroup by pair) instead of
-    // sequentially by doc_a then doc_b. cand's own lang is redundant with
-    // the gather's (both candidate docs share lang by construction — the
-    // prefix join is keyed on it — and g holds one lang per doc).
-    gatherPairGrams(cand.select("doc_a", "doc_b"), g)
+    cand
+      .join(g.select(col("doc_id").as("doc_a"), col("g").as("ga")), Seq("doc_a"))
+      .join(g.select(col("doc_id").as("doc_b"), col("g").as("gb")), Seq("doc_b"))
       // sorted-distinct gram arrays → two-pointer intersection count (see
       // d4cCore's verify): no per-pair hash set or intersection array
       .withColumn("inter",
@@ -6234,16 +6193,6 @@ object PipelineQueries {
     * early if the corpus runs out of pairs (every word one symbol).
     */
   def bpeTrain(s: SparkSession, dir: String, nMerges: Int): Seq[(Int, String, String, String, Long)] = {
-    // Replace-chain checkpoint CADENCE dial: between checkpoints each
-    // pair-count pass re-applies up to (ckptEvery - 1) uncheckpointed
-    // `replace` layers over the word table. At sf0.1 the materialization
-    // job latency dominates (default 4 measured best); a 100 TB corpus —
-    // where one re-scan of the 10⁷-row distinct-word table is cheap but
-    // the per-round job count is not — can raise it, or lower it to 1 so
-    // every round reads a flat checkpoint. The dial changes WHERE the
-    // lineage is cut, never a value: the trajectory (argmax, tie-break,
-    // merge application) is cadence-invariant, spec-pinned at 1 vs 4.
-    val ckptEvery = graft.ConfValue.int(s.conf.getOption, "spark.graft.bpe.ckptEvery", 4, min = 1)
     var words = bpeWordTable(s, dir).lossTolerantCheckpoint()
     val out = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
     var r = 1
@@ -6257,7 +6206,7 @@ object PipelineQueries {
         val (a, b, n) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         out += ((r, a, b, a + b, n))
         words = words.withColumn("repr", expr(s"replace(repr, '($a)($b)', '($a$b)')"))
-        if (r % ckptEvery == 0 && r < nMerges) words = words.lossTolerantCheckpoint()
+        if (r % 4 == 0 && r < nMerges) words = words.lossTolerantCheckpoint()
         r += 1
       }
     }
@@ -7850,15 +7799,8 @@ object PipelineQueries {
         .select(col("a.pk").as("u"), col("b.pk").as("v")),
         col("u"), col("v")).distinct()
       .lossTolerantCheckpoint() // degrees AND orientation read it: one pair join, not two
-    // node-count rows, MATERIALIZED once: the two broadcast sides below
-    // alias deg over u and v, so their subtrees canonicalize differently
-    // and Catalyst cannot ReuseExchange them — without the checkpoint the
-    // degree aggregation (a full pass over the edge list) runs TWICE, once
-    // per BroadcastExchange. One extra tiny materialization job buys a
-    // single degree pass at any scale (guide §2.4 shared computation).
     val deg = e.select(col("u").as("n")).unionAll(e.select(col("v").as("n")))
       .groupBy("n").agg(count(lit(1)).as("d"))
-      .lossTolerantCheckpoint()
     val lower = col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v"))
     val oriented = e
       .join(broadcast(deg.select(col("n").as("u"), col("d").as("du"))), "u")

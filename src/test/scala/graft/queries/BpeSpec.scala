@@ -74,20 +74,6 @@ class BpeSpec extends SparkSpec {
     assert(got == want, s"\nengine: $got\nref:    $want")
   }
 
-  test("the checkpoint cadence moves no merge: ckptEvery 1 and 4 train the same table") {
-    spark.conf.set("spark.graft.bpe.ckptEvery", "1")
-    val every1 = try PipelineQueries.bpeTrain(spark, craftedDir, 8)
-      finally spark.conf.unset("spark.graft.bpe.ckptEvery")
-    assert(every1 == PipelineQueries.bpeTrain(spark, craftedDir, 8))
-  }
-
-  test("a bad spark.graft.bpe.ckptEvery fails naming the key") {
-    spark.conf.set("spark.graft.bpe.ckptEvery", "abc")
-    val e = try intercept[IllegalArgumentException](PipelineQueries.bpeTrain(spark, craftedDir, 8))
-      finally spark.conf.unset("spark.graft.bpe.ckptEvery")
-    assert(e.getMessage.contains("spark.graft.bpe.ckptEvery") && e.getMessage.contains("abc"), e.getMessage)
-  }
-
   test("greedy leftmost non-overlap: merging (a,a) over aaaa yields [aa][aa], over aaa yields [aa][a]") {
     // forces (a,a) to be the first merge; 'aaaa' must contribute 3 to its
     // count but consume as two non-overlapping [aa] tokens afterwards

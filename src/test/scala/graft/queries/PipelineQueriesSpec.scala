@@ -738,40 +738,6 @@ class PipelineQueriesSpec extends SparkSpec {
       PipelineQueries.oracles("g2_triangles"))
   }
 
-  test("gatherPairGrams equals the sequential join-by-doc_a-then-doc_b verify gather") {
-    // the single-exchange gather (round 13) must be row-identical to the
-    // two inner joins it replaced, including the edge cases the inner
-    // joins enforced implicitly: a pair whose side is MISSING from the
-    // gram table drops, a cross-lang pair drops, and ga is always doc_a's
-    // array. Deliberately adversarial ids: doc_a appearing as another
-    // pair's doc_b, negative ids (the planted-copy convention).
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{array_sort => _, col => c2, _}
-    val g = Seq(
-      (-3L, "en", Array(1L, 5L, 9L)),
-      (1L, "en", Array(1L, 5L)),
-      (2L, "en", Array(5L, 9L)),
-      (3L, "de", Array(1L, 9L)),
-      (4L, "en", Array(2L, 7L, 9L))).toDF("doc_id", "lang", "g")
-    val cand = Seq(
-      (-3L, 1L), (1L, 2L),  // both-present same-lang pairs
-      (2L, 3L),             // cross-lang: must drop
-      (2L, 99L), (98L, 4L), // one side missing from g: must drop
-      (2L, 4L)).toDF("doc_a", "doc_b")
-    val sequential = cand
-      .join(g.select(c2("doc_id").as("doc_a"), c2("lang"), c2("g").as("ga")), Seq("doc_a"))
-      .join(g.select(c2("doc_id").as("doc_b"), c2("lang").as("lang_b"), c2("g").as("gb")), Seq("doc_b"))
-      .filter(c2("lang") === c2("lang_b"))
-      .select("doc_a", "doc_b", "lang", "ga", "gb")
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
-      (r.getLong(0), r.getLong(1), r.getString(2),
-        r.getSeq[Long](3).toList, r.getSeq[Long](4).toList)).toSet
-    val gathered = PipelineQueries.gatherPairGrams(cand, g)
-      .select("doc_a", "doc_b", "lang", "ga", "gb")
-    assert(rows(gathered) == rows(sequential))
-    assert(rows(gathered).nonEmpty)
-  }
-
   test("d4b: prefix path over the Heaps view matches a driver-side brute force; planted pairs recovered") {
     // d4b's registered contract: the PPJoin prefix branch over the
     // Heaps-vocabulary view equals exact all-pairs Jaccard over the SAME

@@ -2,6 +2,9 @@ package graft.queries
 
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.NamedExpression
+import org.apache.spark.sql.catalyst.expressions.aggregate.CollectList
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Physical-plan assertions for the headline relational queries — the
@@ -62,6 +65,19 @@ class PlanQualitySpec extends SparkSpec {
       val p = plan(df)
       assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
         s"$name degenerated to a product join")
+    }
+    // the d4b/d4c verify streams both gram arrays through two equi-joins;
+    // regrouping them per candidate pair would buffer every pair's arrays
+    // in aggregation state
+    Seq("d4b" -> PipelineQueries.d4bPlanProbe(spark, sf),
+        "d4c" -> PipelineQueries.d4cPlanProbe(spark, sf)).foreach { case (name, df) =>
+      val pairCollects = df.queryExecution.optimizedPlan.collect {
+        case a: Aggregate if a.groupingExpressions.collect { case e: NamedExpression => e.name }
+            .toSet == Set("doc_a", "doc_b") &&
+          a.aggregateExpressions.exists(_.find(_.isInstanceOf[CollectList]).nonEmpty) => a
+      }
+      assert(pairCollects.isEmpty, s"$name collects gram arrays per candidate pair:\n" +
+        pairCollects.mkString("\n"))
     }
   }
 
