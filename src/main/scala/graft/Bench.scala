@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 object Bench {
   /** Fixed-work contention sentinel: a single-thread 2×10⁸-step xorshift
@@ -27,21 +26,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to every core: the bench contract is local[32]-class hardware,
-    // and an unset env var must not quietly measure a 4-thread run
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // the full suite is ~90 plans × several codegen units each; the default
-      // 100-entry codegen cache evicts between passes, so every timed pass
-      // would re-pay Janino compilation that a long-running cluster pays once
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.configure(spark)
+    val spark = GraftSession("graft.Bench")
+    val master = spark.sparkContext.master
     // A failed query must be LOUD: it records "err" (not a fake
     // time-to-throw duration), lands in the "errors" map with its message,
     // and bumps the failed count in the summary line. Silently swallowed
@@ -154,15 +140,14 @@ object Bench {
       s""""n_ran":${queries.size},"n_registered":${SparkEntry.queries.size}""" +
       only.map(o => s""","only":${o.toSeq.sorted.map(Json.str).mkString("[", ",", "]")}""").getOrElse("") +
       (if (skip.nonEmpty) s""","skip":${skip.toSeq.sorted.map(Json.str).mkString("[", ",", "]")}""" else "")
-    // cpus + master make the artifact SELF-DESCRIBING: the driver's scaling
-    // check compares runs at different $SPARK_GRAFT_CPUS, and without these
+    // cpus + master make the artifact SELF-DESCRIBING: a scaling check
+    // compares runs at different core counts, and without these
     // fields the artifact cannot prove which core count actually ran (the
     // r12 `suspect_cpus_ignored` flag fired on exactly that gap).
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
       s""""failed":${errors.size},"errors":$errJson,$subsetJson,""" +
-      s""""cpus":${scala.util.Try(cpus.trim.toInt.toString).getOrElse(Json.str(cpus))},""" +
-      s""""master":${Json.str(s"local[$cpus]")},""" +
+      s""""cpus":${GraftSession.cpus},"master":${Json.str(master)},""" +
       s""""calib_pre_sec":$calibPre,"calib_post_sec":$calibPost,"sf":"$sfDir"}"""
     // Also write to a dedicated file so the artifact survives stdout being
     // interleaved with Spark logs / truncated by the harness.
@@ -181,7 +166,7 @@ object Bench {
         totals(s"$k#$pass").jsonFields + "}"
     }.mkString("{\n", ",\n", "\n}")
     val metrics =
-      s"""{"master":${Json.str(s"local[$cpus]")},"sf":${Json.str(sfDir)},""" +
+      s"""{"master":${Json.str(master)},"sf":${Json.str(sfDir)},""" +
       s""""queries":$perQuery}"""
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(metricsOut), metrics + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] write $metricsOut: $e") }

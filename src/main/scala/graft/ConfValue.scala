@@ -1,10 +1,11 @@
 package graft
 
-/** The one parse rule for typed `spark.graft.*` values: an unset key takes
-  * its default, and a set value that does not parse or lies outside its
-  * accepted range fails with an IllegalArgumentException naming the key,
-  * what it accepts and the value given. Each caller passes its own lookup
-  * (session conf, or session conf then SparkConf).
+/** The one parse rule for typed `spark.graft.*` values and the
+  * `SPARK_GRAFT_CPUS` variable: an unset key takes its default, and a set
+  * value that does not parse or lies outside its accepted range fails with
+  * an IllegalArgumentException naming the key, what it accepts and the value
+  * given. Each caller passes its own lookup (session conf, session conf then
+  * SparkConf, or the environment).
   */
 object ConfValue {
 
@@ -18,16 +19,11 @@ object ConfValue {
       }
     }
 
-  /** A whole number in [min, max], written as plain digits (no 1e7). */
-  def long(lookup: String => Option[String], key: String, default: Long,
-      min: Long, max: Long = Long.MaxValue): Long =
+  /** A whole number ≥ min, written as plain digits (no 1e7). */
+  def int(lookup: String => Option[String], key: String, default: Int, min: Int): Int =
     lookup(key) match {
       case None => default
-      case Some(v) => v.trim.toLongOption.filter(x => x >= min && x <= max).getOrElse(
-        throw new IllegalArgumentException(s"$key must be an integer in [$min, $max], got '$v'"))
+      case Some(v) => v.trim.toIntOption.filter(_ >= min).getOrElse(
+        throw new IllegalArgumentException(s"$key must be an integer >= $min, got '$v'"))
     }
-
-  def int(lookup: String => Option[String], key: String, default: Int,
-      min: Int, max: Int = Int.MaxValue): Int =
-    long(lookup, key, default.toLong, min.toLong, max.toLong).toInt
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions …
   * }}}
   *
-  * or `SparkSession.builder().withExtensions(new GraftExtensions)`. This is
+  * or `withExtensions(new GraftExtensions)` on a session builder. This is
   * the deployment route for a shared cluster (the functions exist before any
   * user code runs, catalog-visible to plain SQL); `Tables.configure` keeps
   * the temp-function route for sessions the library did not construct. Both

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev utility: synthesize a larger scale factor from an existing one by
@@ -46,13 +46,7 @@ object ScaleUp {
     val docSalt = if (args.length > 3) args(3) else "word"
     require(docSalt == "word" || docSalt == "vocab", s"bad docSalt mode $docSalt")
     require(mult >= 1, s"mult must be >= 1, got $mult")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.configure(spark)
+    val spark = GraftSession("graft.ScaleUp")
 
     def rd(name: String): DataFrame = Tables.t(spark, src, name)
     /** Offset stride for a surrogate key: copy k adds k·(max+1). */

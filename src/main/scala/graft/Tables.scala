@@ -15,15 +15,7 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Tables small enough to broadcast at any realistic scale factor (TPC-H
-    * dims `region`/`nation` are constant-size; `supplier`/`part`/`customer`
-    * grow with SF but stay broadcastable far longer than the fact tables).
-    * Only `region` and `nation` are unconditionally broadcast in query code;
-    * everything else is left to AQE's size-based join selection.
-    */
-  val tinyDims: Set[String] = Set("region", "nation")
-
-  /** Runtime confs every entry point (Verify/Bench/specs) sets at session
+  /** Runtime confs every session (GraftSession, ClusterHarness, specs) sets at
     * construction. events.ts is parquet TIMESTAMP(NANOS), which Spark's
     * vectorized reader rejects; this reads it as raw long nanos instead.
     * Also registers the library's native Catalyst expressions.

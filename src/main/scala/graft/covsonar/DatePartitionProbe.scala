@@ -1,6 +1,5 @@
 package graft.covsonar
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measure the ADR's deployment knob (SCALING.md, "one clustering
@@ -33,13 +32,7 @@ object DatePartitionProbe {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(10000000L)
     val dir = args.lift(1).getOrElse("target/date-partition-probe")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Tables.configure(spark)
+    val spark = graft.GraftSession("graft.covsonar.DatePartitionProbe")
 
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)

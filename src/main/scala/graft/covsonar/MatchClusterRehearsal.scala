@@ -40,10 +40,10 @@ object MatchClusterRehearsal {
     * executor scheduling cannot move it — and nothing but the 3-field
     * aggregate ever reaches the driver.
     */
-  private def digests(store: SonarStore,
-      shapes: Seq[(String, MatchArgs)]): Map[String, (Long, String)] =
+  private def digests(store: SonarStore, shapes: Seq[(String, MatchArgs)],
+      carrierCap: Int = SonarStore.CarrierPlanCap): Map[String, (Long, String)] =
     shapes.map { case (name, margs) =>
-      val df = SonarMatch.matchGenomes(store, margs)
+      val df = SonarMatch.matchGenomes(store, margs, carrierCap)
       val line = concat_ws("\u0001",
         df.columns.toIndexedSeq.map(c => coalesce(col(c).cast("string"), lit("\u0000"))): _*)
       val agg = df.select(md5(line).as("h"))
@@ -69,9 +69,7 @@ object MatchClusterRehearsal {
       val store = MatchVolumeRehearsal.buildStore(local, dir, n)
       SonarOps.optimize(store, maxFilesPerTable = 16, rowGroupBytes = Some(8L << 20))
       val idx = digests(store, shapes)
-      local.conf.set("spark.graft.match.tokenIndex", "false")
-      val plain = try digests(store, shapes)
-        finally local.conf.unset("spark.graft.match.tokenIndex")
+      val plain = digests(store, shapes, carrierCap = 0) // 0: no index lookup
       require(idx == plain, s"indexed vs full-scan diverged single-JVM: " +
         s"${idx.toSeq.diff(plain.toSeq)}")
       (idx, plain)
@@ -144,11 +142,11 @@ object MatchClusterRehearsal {
         s"mid-band probe $midToken resolved $carriers carriers — not in the " +
           s"semi-join band; the measurement would be vacuous")
       val meter = graft.TaskTotals.attach(cluster.sparkContext)
-      def timed(label: String): (Double, Long, Long) = {
-        SonarMatch.matchGenomes(store, midArgs).count() // warm
+      def timed(label: String, carrierCap: Int): (Double, Long, Long) = {
+        SonarMatch.matchGenomes(store, midArgs, carrierCap).count() // warm
         def once(run: Int): Double = {
           val t = System.nanoTime()
-          meter.within(s"$label#$run")(SonarMatch.matchGenomes(store, midArgs).count())
+          meter.within(s"$label#$run")(SonarMatch.matchGenomes(store, midArgs, carrierCap).count())
           (System.nanoTime() - t) / 1e9
         }
         val w = math.min(once(1), once(2))
@@ -160,9 +158,8 @@ object MatchClusterRehearsal {
           f"input ${r._2 / 1e6}%8.1f MB  shuffle ${r._3 / 1e6}%8.1f MB")
         r
       }
-      val midIdx = timed("pruned")
-      cluster.conf.set("spark.graft.match.tokenIndex", "false")
-      val midFull = try timed("full-join") finally cluster.conf.unset("spark.graft.match.tokenIndex")
+      val midIdx = timed("pruned", SonarStore.CarrierPlanCap)
+      val midFull = timed("full-join", carrierCap = 0)
       println(f"MIDBAND WIN wall ${midFull._1 / midIdx._1}%4.2fx  " +
         f"input ${midFull._2.toDouble / math.max(midIdx._2, 1)}%4.2fx  " +
         f"shuffle ${midFull._3.toDouble / math.max(midIdx._3, 1)}%4.2fx")

@@ -143,13 +143,7 @@ object MatchVolumeRehearsal {
     // new (appended-vs-optimized row agreement is pinned at 10⁵..10⁷); the
     // indexed-vs-full-scan agreement still runs on the optimized store.
     val fast = args.lift(2).contains("fast")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Tables.configure(spark)
+    val spark = graft.GraftSession("graft.covsonar.MatchVolumeRehearsal")
 
     val t0 = System.nanoTime()
     val store = buildStore(spark, dir, n)
@@ -164,15 +158,18 @@ object MatchVolumeRehearsal {
     // scan-volume accounting: task input bytes per measured run
     val meter = graft.TaskTotals.attach(spark.sparkContext)
 
-    def runShapes(label: String): Map[String, (Long, Double, Long)] = {
+    // carrierCap 0 skips the token index: the full-scan plan on the same store
+    def runShapes(label: String, carrierCap: Int = SonarStore.CarrierPlanCap)
+        : Map[String, (Long, Double, Long)] = {
       // untimed warm pass: equalize page-cache / writeback state across
       // phases (the phase right after OPTIMIZE otherwise pays the rewrite's
       // cold cache and its timings under-credit the indexed plans)
-      shapes.foreach { case (_, margs) => SonarMatch.matchGenomes(store, margs).count() }
+      shapes.foreach { case (_, margs) => SonarMatch.matchGenomes(store, margs, carrierCap).count() }
       val timings = shapes.map { case (name, margs) =>
         def once(run: Int): (Long, Double) = {
           val t = System.nanoTime()
-          val rows = meter.within(s"$label/$name#$run")(SonarMatch.matchGenomes(store, margs).count())
+          val rows = meter.within(s"$label/$name#$run")(
+            SonarMatch.matchGenomes(store, margs, carrierCap).count())
           (rows, (System.nanoTime() - t) / 1e9)
         }
         val (rows1, s1) = once(1)
@@ -198,9 +195,7 @@ object MatchVolumeRehearsal {
     println(f"OPTIMIZE (32 files, 8 MB row groups, token index) in ${(System.nanoTime() - tOpt) / 1e9}%.1f s")
 
     val indexed = runShapes("indexed  ")
-    spark.conf.set("spark.graft.match.tokenIndex", "false")
-    val optScan = runShapes("opt-noidx")
-    spark.conf.unset("spark.graft.match.tokenIndex")
+    val optScan = runShapes("opt-noidx", carrierCap = 0)
 
     // rows must agree across all (run) physical plans
     shapes.foreach { case (name, _) =>
@@ -271,9 +266,7 @@ object MatchVolumeRehearsal {
     require(merged("profile_ultra")._1 == indexed("profile_ultra")._1 + newAccessions,
       s"merged index must serve the NEW carriers: ${merged("profile_ultra")._1} " +
         s"vs ${indexed("profile_ultra")._1} + $newAccessions")
-    spark.conf.set("spark.graft.match.tokenIndex", "false")
-    val mergedScan = runShapes("mrg-noidx")
-    spark.conf.unset("spark.graft.match.tokenIndex")
+    val mergedScan = runShapes("mrg-noidx", carrierCap = 0)
     shapes.foreach { case (name, _) =>
       require(merged(name)._1 == mergedScan(name)._1,
         s"$name diverged post-merge: ${merged(name)._1} vs ${mergedScan(name)._1}")
@@ -306,9 +299,7 @@ object MatchVolumeRehearsal {
     require(removed("profile_ultra")._1 == indexed("profile_ultra")._1,
       s"restamped index must drop the removed carriers: ${removed("profile_ultra")._1} " +
         s"vs pre-increment ${indexed("profile_ultra")._1}")
-    spark.conf.set("spark.graft.match.tokenIndex", "false")
-    val removedScan = runShapes("rm-noidx ")
-    spark.conf.unset("spark.graft.match.tokenIndex")
+    val removedScan = runShapes("rm-noidx ", carrierCap = 0)
     shapes.foreach { case (name, _) =>
       require(removed(name)._1 == removedScan(name)._1,
         s"$name diverged post-remove: ${removed(name)._1} vs ${removedScan(name)._1}")

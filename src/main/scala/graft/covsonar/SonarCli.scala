@@ -18,12 +18,7 @@ import scala.jdk.CollectionConverters._
 object SonarCli {
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .appName("covsonarspark")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession("covsonarspark")
     try run(spark, args.toSeq, System.out, System.err)
     finally spark.stop()
   }

@@ -278,7 +278,16 @@ object SonarMatch {
     * as space-joined strings in the reference's CSV shape; use `.count()` on
     * the result for count mode (P8).
     */
-  def matchGenomes(store: SonarStore, args0: MatchArgs): DataFrame = {
+  def matchGenomes(store: SonarStore, args0: MatchArgs): DataFrame =
+    matchGenomes(store, args0, SonarStore.CarrierPlanCap)
+
+  /** [[matchGenomes]] with the token-index carrier cap given: carrier sets
+    * up to `carrierCap` take the pruned plan, and `0` skips the index lookup
+    * altogether (the full essence scan). Specs and rehearsals force a plan
+    * tier through it; results are the same for every cap.
+    */
+  private[graft] def matchGenomes(store: SonarStore, args0: MatchArgs,
+      carrierCap: Int): DataFrame = {
     val args = args0.normalized
 
     // R1: token validation
@@ -355,12 +364,8 @@ object SonarMatch {
     // over that slice instead of scanning every profile row; the predicate
     // conjunction below is applied unchanged on top, so results are
     // byte-identical with the index on, stale, or absent.
-    val conf = store.spark.conf
-    val carrierCap = graft.ConfValue.int(conf.getOption, "spark.graft.match.carrierCap",
-      SonarStore.CarrierPlanCap, min = 0)
-    val indexOn = graft.ConfValue.bool(conf.getOption, "spark.graft.match.tokenIndex", true)
     val base =
-      (if (indexOn && includeGroups.nonEmpty)
+      (if (carrierCap > 0 && includeGroups.nonEmpty)
         TokenIndex.carrierSuperset(store, includeGroups, carrierCap)
       else None) match {
         case Some(carriers) => store.essenceForSeqhashes(carriers)

@@ -1,6 +1,6 @@
 package graft.covsonar
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -92,10 +92,8 @@ final class SonarStore(val spark: SparkSession, val dir: String) {
     conform(name, df).write.mode("append").parquet(tablePath(name).toString)
 
   /** Atomically replace a table's contents (covers UPDATE/DELETE rewrites,
-    * K6/K7). Writes to a staging dir, then swaps via rename. Hadoop rename
-    * reports failure via its boolean (it rarely throws), so both renames are
-    * checked: a failed swap rolls the old data back instead of deleting the
-    * only surviving copy.
+    * K6/K7). Writes to a staging dir, then swaps it in via
+    * [[SonarStore.swapIn]].
     */
   def replace(name: String, df: DataFrame): Unit = replace(name, df, Map.empty)
 
@@ -106,16 +104,7 @@ final class SonarStore(val spark: SparkSession, val dir: String) {
     val live = tablePath(name)
     val staging = new Path(new Path(dir), s".staging-$name-${java.util.UUID.randomUUID}")
     conform(name, df).write.options(options).mode("overwrite").parquet(staging.toString)
-    val trash = new Path(new Path(dir), s".old-$name-${java.util.UUID.randomUUID}")
-    val hadLive = fs.exists(live)
-    if (hadLive)
-      require(fs.rename(live, trash), s"store error: cannot move $live aside for replace")
-    if (!fs.rename(staging, live)) {
-      if (hadLive) fs.rename(trash, live) // roll back; best-effort
-      throw new IllegalStateException(
-        s"store error: cannot activate new data for table $name (staging left at $staging)")
-    }
-    if (hadLive) fs.delete(trash, true)
+    SonarStore.swapIn(fs, staging, live, s"new data for table $name")
   }
 
   /** essence = genome ⟕ profile USING(seqhash) — the target of every match
@@ -170,6 +159,26 @@ final class SonarStore(val spark: SparkSession, val dir: String) {
 
 object SonarStore {
 
+  /** The one rename-swap protocol of the store: move the live directory
+    * aside, rename `staging` into its place, roll the old data back if that
+    * fails, and only then delete the old copy. Hadoop rename reports
+    * failure via its boolean (it rarely throws), so both renames are
+    * checked: a failed swap rolls the old data back instead of deleting the
+    * only surviving copy. `label` names the data in the error messages.
+    */
+  private[covsonar] def swapIn(fs: FileSystem, staging: Path, live: Path, label: String): Unit = {
+    val trash = new Path(live.getParent, s".old-${live.getName}-${java.util.UUID.randomUUID}")
+    val hadLive = fs.exists(live)
+    if (hadLive)
+      require(fs.rename(live, trash), s"store error: cannot move $live aside to activate $label")
+    if (!fs.rename(staging, live)) {
+      if (hadLive) fs.rename(trash, live) // roll back; best-effort
+      throw new IllegalStateException(
+        s"store error: cannot activate $label (staging left at $staging)")
+    }
+    if (hadLive) fs.delete(trash, true)
+  }
+
   /** Carrier IN-lists up to this size push into parquet scans as row-group
     * filters. Spark lowers a pushed `In` to a left-deep OR chain whose
     * parquet-mr visitor recurses once per value: a measured probe on this
@@ -180,9 +189,9 @@ object SonarStore {
     */
   val CarrierPushdownCap = 512
 
-  /** Carrier sets up to this size switch `match` onto the pruned plan
-    * (`spark.graft.match.carrierCap` overrides). Above it, a full essence
-    * scan is the right plan anyway: 10⁴ point lookups stop being "rare".
+  /** Carrier sets up to this size switch `match` onto the pruned plan.
+    * Above it, a full essence scan is the right plan anyway: 10⁴ point
+    * lookups stop being "rare".
     */
   val CarrierPlanCap = 10000
 

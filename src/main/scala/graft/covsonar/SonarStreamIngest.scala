@@ -10,14 +10,18 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * continuously) and runs every micro-batch through the exact batch
   * pipeline via `foreachBatch` — harmonize/SEGUID, seqhash dedup against
   * the store, alignment + variant calling in `mapPartitions`, paranoid
-  * roundtrip, idempotent appends — nothing is reimplemented.
+  * roundtrip and the table appends — nothing is reimplemented.
   *
   * Delivery semantics: the file source records processed files in the
-  * checkpoint, so each file is read once; if a batch is replayed after a
-  * crash mid-`add`, the seqhash-sentinel write ordering inside `add` makes
-  * the replay idempotent (duplicate profile/variant rows are ignored, the
-  * `sequence` sentinel is appended last — see SonarIngest). State is
-  * bounded: the only streaming state is the processed-file log.
+  * checkpoint, so each file is read once. A batch replayed after a crash
+  * mid-`add` is NOT idempotent: `add` appends `profile`, `sequence2dna` and
+  * `sequence2prot` without an anti-join against rows already stored (only
+  * the `dna`/`prot` dimension tables are deduplicated), and the `sequence`
+  * sentinel, appended last, is the only dedup key. A crash after the
+  * per-sequence appends but before `sequence` therefore leaves their rows
+  * in place, the replay appends them again, and `essence` (a plain join)
+  * returns each such genome once per copy. State is bounded: the only
+  * streaming state is the processed-file log.
   *
   * Scale notes: `maxFilesPerTrigger` bounds each micro-batch; alignment
   * parallelism inside a batch is executor parallelism, identical to batch

@@ -171,24 +171,16 @@ object SonarVcf {
       store: SonarStore,
       path: String,
       accessions: Seq[String] = Nil,
-      dates: Seq[String] = Nil): Unit = {
-    val spark = store.spark
-    import spark.implicits._
-    val sites = vcfSites(store, accessions, dates).cache()
-    val sampleIds = sites
-      .select(explode(map_keys(col("genotypes"))).as("acc"))
-      .distinct().orderBy("acc").as[String].collect().toSeq
-    val head = spark.createDataset(header(sampleIds, Reference.sarsCov2.refDescr)
-      .split("\n").toSeq).toDF("line")
-    val writer = head.coalesce(1)
-      .union(vcfLines(sites, sampleIds).coalesce(1))
-      .write.mode(SaveMode.Overwrite)
-    (if (path.endsWith(".gz"))
-       writer.option("compression", classOf[BgzfCodec].getName)
-     else writer)
-      .text(path)
-    sites.unpersist()
-  }
+      dates: Seq[String] = Nil): Unit =
+    withSites(store, accessions, dates) { (sites, sampleIds, head) =>
+      val writer = head.coalesce(1)
+        .union(vcfLines(sites, sampleIds).coalesce(1))
+        .write.mode(SaveMode.Overwrite)
+      (if (path.endsWith(".gz"))
+         writer.option("compression", classOf[BgzfCodec].getName)
+       else writer)
+        .text(path)
+    }
 
   /** Population-scale export — removes [[exportVcf]]'s inherent
     * single-task coalesce(1) (fine at reference parity, a bottleneck for
@@ -211,23 +203,35 @@ object SonarVcf {
       accessions: Seq[String] = Nil,
       dates: Seq[String] = Nil): Unit = {
     require(shards >= 1, s"shards must be positive, got $shards")
+    withSites(store, accessions, dates) { (sites, sampleIds, head) =>
+      val bgzf = classOf[BgzfCodec].getName
+      head.coalesce(1).write.mode(SaveMode.Overwrite)
+        .option("compression", bgzf).text(s"$path/00-header")
+      formatLines(
+          sites.repartitionByRange(shards, col("pos"))
+            .sortWithinPartitions("pos", "ref"),
+          sampleIds)
+        .write.mode(SaveMode.Overwrite)
+        .option("compression", bgzf).text(s"$path/01-body")
+    }
+  }
+
+  /** The prologue both exports share: the cached site table, its sample ids
+    * in column order and the header lines, handed to `write`; the sites are
+    * unpersisted after it.
+    */
+  private def withSites(store: SonarStore, accessions: Seq[String], dates: Seq[String])(
+      write: (DataFrame, Seq[String], DataFrame) => Unit): Unit = {
     val spark = store.spark
     import spark.implicits._
     val sites = vcfSites(store, accessions, dates).cache()
-    val sampleIds = sites
-      .select(explode(map_keys(col("genotypes"))).as("acc"))
-      .distinct().orderBy("acc").as[String].collect().toSeq
-    val bgzf = classOf[BgzfCodec].getName
-    spark.createDataset(header(sampleIds, Reference.sarsCov2.refDescr)
+    try {
+      val sampleIds = sites
+        .select(explode(map_keys(col("genotypes"))).as("acc"))
+        .distinct().orderBy("acc").as[String].collect().toSeq
+      val head = spark.createDataset(header(sampleIds, Reference.sarsCov2.refDescr)
         .split("\n").toSeq).toDF("line")
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .option("compression", bgzf).text(s"$path/00-header")
-    formatLines(
-        sites.repartitionByRange(shards, col("pos"))
-          .sortWithinPartitions("pos", "ref"),
-        sampleIds)
-      .write.mode(SaveMode.Overwrite)
-      .option("compression", bgzf).text(s"$path/01-body")
-    sites.unpersist()
+      write(sites, sampleIds, head)
+    } finally sites.unpersist()
   }
 }

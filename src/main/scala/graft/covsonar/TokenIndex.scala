@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * Match-time use (see [[SonarMatch.matchGenomes]]): for include-profile
   * queries, resolve a *carrier superset* — a seqhash set that provably
   * contains every matching genome — from the index, and when it is small
-  * (≤ `spark.graft.match.carrierCap`, default 10000), match over the
+  * (≤ [[SonarStore.CarrierPlanCap]], 10000), match over the
   * carrier slice instead of the full essence scan
   * ([[SonarStore.essenceForSeqhashes]]): up to
   * [[SonarStore.CarrierPushdownCap]] carriers as IN literals pushed into
@@ -289,15 +289,7 @@ object TokenIndex {
     // the freshness check against a different tokens table.
     fs.delete(metaPath(store), false)
 
-    val live = tokensPath(store)
-    val trash = new Path(indexRoot(store), s".old-${java.util.UUID.randomUUID}")
-    val hadLive = fs.exists(live)
-    if (hadLive) require(fs.rename(live, trash), s"cannot move $live aside")
-    if (!fs.rename(staging, live)) {
-      if (hadLive) fs.rename(trash, live)
-      throw new IllegalStateException(s"cannot activate token index (staging at $staging)")
-    }
-    if (hadLive) fs.delete(trash, true)
+    SonarStore.swapIn(fs, staging, tokensPath(store), "token index")
 
     writeMetaFile(store, buildCap, sig, hot)
   }

@@ -857,21 +857,15 @@ object PipelineQueries {
     */
   private[queries] val D4cDfCap = 64L
 
-  /** Broadcast budget for d4c's stop-gram set (entries, not bytes):
-    * default 16M ≈ the point past which a driver-collected + broadcast
-    * string set stops being "stopword-list shaped". Session-configurable
-    * via `spark.graft.d4c.stopGramBudget` — tests shrink it to force the
-    * over-budget paths; a large-driver deployment can raise it. Bounded
-    * to Int range because the degrade path's deterministic top-(budget-1)
-    * cut runs through limit().
+  /** Broadcast budget for d4c's stop-gram set (entries, not bytes): 16M ≈
+    * the point past which a driver-collected + broadcast string set stops
+    * being "stopword-list shaped". [[d4cCore]] takes the budget as an
+    * argument so specs can shrink it to force the over-budget path.
     */
-  private[queries] val D4cStopGramBudgetDefault: Long = 1L << 24
-  private[queries] def d4cStopGramBudget(s: SparkSession): Long =
-    graft.ConfValue.long(s.conf.getOption, "spark.graft.d4c.stopGramBudget",
-      D4cStopGramBudgetDefault, min = 2, max = Int.MaxValue.toLong)
+  private[queries] val D4cStopGramBudget: Int = 1 << 24
 
   private[queries] def d4cCore(s: SparkSession, docs: DataFrame,
-      materialize: Boolean = true): DataFrame = {
+      materialize: Boolean = true, stopGramBudget: Int = D4cStopGramBudget): DataFrame = {
     import s.implicits._
     // Pass 1: distinct char-4-grams per doc (d4's gram rule exactly, in
     // d4's packed-long representation — [[packedGrams]], bijective),
@@ -902,37 +896,18 @@ object PipelineQueries {
     // The stop-gram set is language/template-bounded (frequent-word
     // interiors), so it collects and broadcasts like a stopword list; one
     // partial-aggregable df pass — d4's dfreq shuffle — pays for it.
-    // Broadcast budget + over-budget policy are session dials. The GUARD
-    // runs as a DISTRIBUTED count BEFORE any driver-side collect: on
-    // exactly the adversarial/non-text corpus the refusal message
-    // describes, collecting the full hot set first would OOM the driver
-    // before the guard could fire, making the actionable error
-    // unreachable in the one case it was written for.
-    val budget: Long = d4cStopGramBudget(s)
-    val overCapMode: String =
-      s.conf.getOption("spark.graft.d4c.overCapMode").getOrElse("degrade")
-    require(overCapMode == "degrade" || overCapMode == "fail",
-      s"spark.graft.d4c.overCapMode must be 'degrade' or 'fail', got '$overCapMode'")
+    // The GUARD runs as a DISTRIBUTED count BEFORE any driver-side
+    // collect: on an adversarial or non-text corpus, collecting the full
+    // hot set first would OOM the driver before the budget could cut it.
     val hotFrame = g
       .select(col("lang"), col("doc_id"), explode(col("g")).as("gram"))
       .groupBy("lang", "gram").agg(count(lit(1)).as("df"))
       .filter(col("df") > lit(D4cDfCap))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val hotPairs: Array[(String, Long)] = try {
-    val hotN = hotFrame.count()
-      if (hotN < budget)
+      val hotN = hotFrame.count()
+      if (hotN < stopGramBudget)
         hotFrame.select("lang", "gram").as[(String, Long)].collect()
-      else if (overCapMode == "fail")
-        throw new IllegalArgumentException(
-          s"d4c stop-gram set has $hotN entries, exceeding the broadcast " +
-            s"budget of $budget — not broadcast-shaped. A natural-language " +
-            "corpus cannot reach this (frequent-gram count is language-" +
-            s"bounded), so the input is adversarial or non-text: raise " +
-            s"D4cDfCap (currently $D4cDfCap) so fewer grams qualify as hot, " +
-            "pre-filter the corpus view, use d4b's exact prefix path (no " +
-            "broadcast stop-gram stage), or set " +
-            "spark.graft.d4c.overCapMode=degrade to keep only the " +
-            "budget's-worth of hottest grams")
       else {
         // DEGRADE: auto-raise the effective df cap to the broadcast
         // budget — keep only the (budget-1) hottest grams as stop-grams,
@@ -943,15 +918,15 @@ object PipelineQueries {
         // verified — a priced degrade, not a correctness loss. A 100 TB
         // job dying at hour N on a require is the worse outcome.
         org.slf4j.LoggerFactory.getLogger(getClass)
-          .warn(s"d4c: stop-gram set $hotN >= budget $budget; degrading " +
-            s"to the ${budget - 1} hottest grams (overCapMode=degrade)")
+          .warn(s"d4c: stop-gram set $hotN >= budget $stopGramBudget; degrading " +
+            s"to the ${stopGramBudget - 1} hottest grams")
         hotFrame.orderBy(col("df").desc, col("lang").asc, col("gram").asc)
-          .limit((budget - 1).toInt)
+          .limit(stopGramBudget - 1)
           .select("lang", "gram").as[(String, Long)].collect()
       }
     } catch { case t: Throwable =>
-      // the fail-mode refusal must not leak the gram/df caches into a
-      // long-lived session that catches the error and moves on
+      // a failed probe must not leak the gram/df caches into a long-lived
+      // session that catches the error and moves on
       hotFrame.unpersist(blocking = false)
       g.unpersist(blocking = false)
       throw t
@@ -1614,22 +1589,12 @@ object PipelineQueries {
   /** Edge-count boundary between d6's driver union-find path and the
     * distributed label-propagation path. Each probed edge is one
     * (Long, Long) tuple — ~16 payload bytes, ~48 with driver-side object
-    * overhead — so the 2M default bounds the probe's driver footprint at
-    * ~100 MB, comfortable under any realistic driver heap (Spark's own
-    * default driver is 1g; a cluster deployment running 10g+ drivers can
-    * raise the crossover, a constrained one can lower it). Configurable
-    * per session via `spark.graft.d6.driverEdgeThreshold`; the crossover
-    * economics are documented in SCALING.md alongside d6b's exponent.
+    * overhead — so 2M bounds the probe's driver footprint at ~100 MB,
+    * comfortable under any realistic driver heap (Spark's own default
+    * driver is 1g). The crossover economics are documented in SCALING.md
+    * alongside d6b's exponent; d6b forces the distributed path.
     */
-  private[queries] val D6DriverEdgeThresholdDefault: Int = 2000000
-  private[queries] def d6DriverEdgeThreshold(s: SparkSession): Int = {
-    val v = graft.ConfValue.long(s.conf.getOption, "spark.graft.d6.driverEdgeThreshold",
-      D6DriverEdgeThresholdDefault.toLong, min = 0)
-    // the probe runs limit(threshold + 1); larger settings just mean
-    // "always take the driver path up to Int.MaxValue-1 probed edges"
-    math.min(v, (Int.MaxValue - 1).toLong).toInt
-  }
-
+  private[queries] val D6DriverEdgeThreshold: Int = 2000000
 
   private[queries] def d6Impl(
       s: SparkSession, dir: String, forceDistributed: Boolean): DataFrame = {
@@ -1658,9 +1623,8 @@ object PipelineQueries {
       import s.implicits._
       if (forceDistributed) propagateLabels(withCanon, edges0.lossTolerantCheckpoint())
       else {
-        val threshold = d6DriverEdgeThreshold(s)
-        val probe = edges0.limit(threshold + 1).as[(Long, Long)].collect()
-        if (probe.length <= threshold) unionFindAssign(s, dir, probe)
+        val probe = edges0.limit(D6DriverEdgeThreshold + 1).as[(Long, Long)].collect()
+        if (probe.length <= D6DriverEdgeThreshold) unionFindAssign(s, dir, probe)
         else propagateLabels(withCanon, edges0.lossTolerantCheckpoint())
       }
     }

@@ -209,10 +209,8 @@ class ClusterModeSpec extends AnyFunSuite with BeforeAndAfterAll {
       shapes.foreach { args =>
         val indexed = SonarMatch.matchGenomes(store, args)
           .collect().map(r => ClusterHarness.canonValue(r)).sorted.toSeq
-        cluster.conf.set("spark.graft.match.tokenIndex", "false")
-        val full = try SonarMatch.matchGenomes(store, args)
+        val full = SonarMatch.matchGenomes(store, args, 0) // 0: no index lookup
           .collect().map(r => ClusterHarness.canonValue(r)).sorted.toSeq
-        finally cluster.conf.unset("spark.graft.match.tokenIndex")
         assert(indexed == full, s"indexed≠full on cluster for $args")
       }
     } finally {

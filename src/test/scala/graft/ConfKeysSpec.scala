@@ -11,11 +11,12 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ConfKeysSpec extends AnyFunSuite {
 
+  /** The fault-tolerance dials of [[Ckpt]], which `ClusterKillRehearsal`
+    * sets and rehearses. A branch that only a spec needs to force takes an
+    * argument instead of a session dial.
+    */
   private val keys = Set(
-    "checkpoint.replicated", "checkpoint.reliable", "checkpoint.reliable.every",
-    "d4c.stopGramBudget", "d4c.overCapMode",
-    "d6.driverEdgeThreshold",
-    "match.carrierCap", "match.tokenIndex")
+    "checkpoint.replicated", "checkpoint.reliable", "checkpoint.reliable.every")
 
   /** Every `"spark.graft.<key>` string literal under src/main, by key. */
   private def keysUnder(root: String): Map[String, Seq[String]] =

@@ -103,6 +103,12 @@ class SonarEndToEndSpec extends SparkSpec {
     assertMatchesGolden(SonarMatch.matchGenomes(store, MatchArgs()), "expected.csv")
   }
 
+  test("info data types: genome counts per (source, collection), ordered (A5)") {
+    val rows = SonarOps.infoDataTypes(store).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
+    assert(rows == Seq(("DESH", "RANDOM", 1L), ("DESH", "SUSPECT", 1L), ("REFSEQ", "", 1L)))
+  }
+
   test("match 2: date range + C241T (test.sh:48)") {
     assertMatchesGolden(SonarMatch.matchGenomes(store,
       MatchArgs(profiles = Seq(Seq("C241T")), dates = Seq("2021-01-01:2021-01-31"))),

@@ -146,16 +146,13 @@ class SonarMatchFuzzSpec extends SparkSpec {
     // fallback path through the same assertions
     SonarOps.optimize(store, maxFilesPerTable = 3)
     (1 to 40).foreach { trial =>
-      if (trial % 7 == 0) spark.conf.set("spark.graft.match.carrierCap", "1")
-      else spark.conf.unset("spark.graft.match.carrierCap")
-      try {
-        val args = randomArgs(rnd)
-        val got = SonarMatch.matchGenomes(store, args)
-          .select("accession").collect().map(_.getString(0)).toSet
-        val want = expected(gs, args)
-        assert(got == want,
-          s"indexed trial $trial diverged for $args\n  missing: ${want -- got}\n  extra: ${got -- want}")
-      } finally spark.conf.unset("spark.graft.match.carrierCap")
+      val cap = if (trial % 7 == 0) 1 else SonarStore.CarrierPlanCap
+      val args = randomArgs(rnd)
+      val got = SonarMatch.matchGenomes(store, args, cap)
+        .select("accession").collect().map(_.getString(0)).toSet
+      val want = expected(gs, args)
+      assert(got == want,
+        s"indexed trial $trial diverged for $args\n  missing: ${want -- got}\n  extra: ${got -- want}")
     }
   }
 }

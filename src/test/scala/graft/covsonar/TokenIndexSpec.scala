@@ -49,10 +49,9 @@ class TokenIndexSpec extends SparkSpec {
   private def accs(df: org.apache.spark.sql.DataFrame): Set[String] =
     df.select("accession").collect().map(_.getString(0)).toSet
 
-  private def withIndexOff[T](body: => T): T = {
-    spark.conf.set("spark.graft.match.tokenIndex", "false")
-    try body finally spark.conf.unset("spark.graft.match.tokenIndex")
-  }
+  /** The same match with the index lookup skipped: the full essence scan. */
+  private def fullScan(store: SonarStore, args: MatchArgs) =
+    SonarMatch.matchGenomes(store, args, 0)
 
   test("build → fresh; profile append → stale; rebuild → fresh again") {
     val store = buildStore()
@@ -94,7 +93,7 @@ class TokenIndexSpec extends SparkSpec {
     // exclude-only queries have no include groups to prune on
     val exOnly = MatchArgs(excludeProfiles = Seq(Seq(Rare)))
     assert(accs(SonarMatch.matchGenomes(store, exOnly)) ==
-      withIndexOff(accs(SonarMatch.matchGenomes(store, exOnly))))
+      accs(fullScan(store, exOnly)))
     // stale: append then match — must fall back, not mis-prune
     store.append("profile", spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(
@@ -105,7 +104,7 @@ class TokenIndexSpec extends SparkSpec {
     val args = MatchArgs(profiles = Seq(Seq(Rare)))
     val got = accs(SonarMatch.matchGenomes(store, args))
     assert(got.contains("accXYZ"), s"stale index must not hide new rows: $got")
-    assert(got == withIndexOff(accs(SonarMatch.matchGenomes(store, args))))
+    assert(got == accs(fullScan(store, args)))
   }
 
   test("pruned results are byte-identical to full-scan across golden shapes") {
@@ -128,8 +127,7 @@ class TokenIndexSpec extends SparkSpec {
     shapes.foreach { args =>
       val pruned = SonarMatch.matchGenomes(store, args)
         .collect().map(_.toString).sorted.toSeq
-      val full = withIndexOff(
-        SonarMatch.matchGenomes(store, args).collect().map(_.toString).sorted.toSeq)
+      val full = fullScan(store, args).collect().map(_.toString).sorted.toSeq
       assert(pruned == full, s"pruned≠full for $args")
     }
     assert(accs(SonarMatch.matchGenomes(store, MatchArgs(profiles = Seq(Seq(Absent))))).isEmpty)
@@ -159,30 +157,6 @@ class TokenIndexSpec extends SparkSpec {
       .filter(_.contains("PushedFilters"))
       .count(_.contains("In(seqhash"))
     assert(scansWithIn >= 2, s"expected carrier IN pushed to genome AND profile scans:\n$plan")
-  }
-
-  test("a bad spark.graft.match.carrierCap fails naming the key") {
-    val store = buildStore()
-    for (bad <- Seq("abc", "-1")) {
-      spark.conf.set("spark.graft.match.carrierCap", bad)
-      try {
-        val e = intercept[IllegalArgumentException](
-          SonarMatch.matchGenomes(store, MatchArgs(profiles = Seq(Seq(Rare)))))
-        assert(e.getMessage.contains("spark.graft.match.carrierCap") && e.getMessage.contains(bad),
-          e.getMessage)
-      } finally spark.conf.unset("spark.graft.match.carrierCap")
-    }
-  }
-
-  test("a bad spark.graft.match.tokenIndex fails naming the key") {
-    val store = buildStore()
-    spark.conf.set("spark.graft.match.tokenIndex", "yes")
-    try {
-      val e = intercept[IllegalArgumentException](
-        SonarMatch.matchGenomes(store, MatchArgs(profiles = Seq(Seq(Rare)))))
-      assert(e.getMessage.contains("spark.graft.match.tokenIndex") && e.getMessage.contains("yes"),
-        e.getMessage)
-    } finally spark.conf.unset("spark.graft.match.tokenIndex")
   }
 
   test("property fuzz: carrier superset ⊇ true matching seqhashes for random groups") {
@@ -258,8 +232,8 @@ class TokenIndexSpec extends SparkSpec {
         MatchArgs(profiles = Seq(Seq(Rare, RareAa)))).foreach { args =>
       val pruned = SonarMatch.matchGenomes(store, args)
         .collect().map(_.toString).sorted.toSeq
-      assert(pruned == withIndexOff(SonarMatch.matchGenomes(store, args)
-        .collect().map(_.toString).sorted.toSeq), s"pruned≠full after merge for $args")
+      assert(pruned == fullScan(store, args)
+        .collect().map(_.toString).sorted.toSeq, s"pruned≠full after merge for $args")
     }
   }
 
@@ -284,7 +258,7 @@ class TokenIndexSpec extends SparkSpec {
       "hot token in every cover → no pruning")
     val args = MatchArgs(profiles = Seq(Seq(Mid)))
     assert(accs(SonarMatch.matchGenomes(store, args)) ==
-      withIndexOff(accs(SonarMatch.matchGenomes(store, args))))
+      accs(fullScan(store, args)))
     assert(accs(SonarMatch.matchGenomes(store, args)).contains("acc_hashM1"))
   }
 
@@ -328,7 +302,7 @@ class TokenIndexSpec extends SparkSpec {
         MatchArgs(profiles = Seq(Seq(Rare))),
         MatchArgs(profiles = Seq(Seq(Rare), Seq(Mid)))).foreach { args =>
       assert(accs(SonarMatch.matchGenomes(store, args)) ==
-        withIndexOff(accs(SonarMatch.matchGenomes(store, args))), s"diverged for $args")
+        accs(fullScan(store, args)), s"diverged for $args")
     }
     // merge under an overflowed META keeps working and stays overflowed
     val preSig = profileSig(store)
@@ -338,7 +312,7 @@ class TokenIndexSpec extends SparkSpec {
     assert(TokenIndex.isFresh(store))
     val args = MatchArgs(profiles = Seq(Seq(Rare)))
     assert(accs(SonarMatch.matchGenomes(store, args)) ==
-      withIndexOff(accs(SonarMatch.matchGenomes(store, args))))
+      accs(fullScan(store, args)))
   }
 
   test("SonarIngest.add keeps a fresh index fresh end-to-end (merge wired in)") {
@@ -361,8 +335,8 @@ class TokenIndexSpec extends SparkSpec {
     // the ingested genome's variant is immediately index-served
     val got = SonarMatch.matchGenomes(store, MatchArgs(profiles = Seq(Seq(token))))
     assert(accs(got).contains("ING1"))
-    assert(accs(got) == withIndexOff(accs(SonarMatch.matchGenomes(store,
-      MatchArgs(profiles = Seq(Seq(token)))))))
+    assert(accs(got) == accs(fullScan(store,
+      MatchArgs(profiles = Seq(Seq(token))))))
   }
 
   test("remove restamps: index survives a delete without rebuild, results exact") {
@@ -382,7 +356,7 @@ class TokenIndexSpec extends SparkSpec {
     val args = MatchArgs(profiles = Seq(Seq(Rare)))
     val got = accs(SonarMatch.matchGenomes(store, args))
     assert(got == Set("acc2"), s"only the surviving carrier remains: $got")
-    assert(got == withIndexOff(accs(SonarMatch.matchGenomes(store, args))))
+    assert(got == accs(fullScan(store, args)))
     // and a subsequent APPEND still merges on top of the restamped index
     val preSig = profileSig(store)
     appendRows(store, Seq(
@@ -391,7 +365,7 @@ class TokenIndexSpec extends SparkSpec {
       store.table("profile").filter(col("seqhash") === "hashRM1"), preSig))
     val got2 = accs(SonarMatch.matchGenomes(store, args))
     assert(got2 == Set("acc2", "acc_hashRM1"))
-    assert(got2 == withIndexOff(accs(SonarMatch.matchGenomes(store, args))))
+    assert(got2 == accs(fullScan(store, args)))
   }
 
   test("repeated and no-op removes keep restamping; empty carrier tokens stay exact") {
@@ -403,7 +377,7 @@ class TokenIndexSpec extends SparkSpec {
     assert(TokenIndex.isFresh(store))
     val args = MatchArgs(profiles = Seq(Seq(Rare)))
     assert(accs(SonarMatch.matchGenomes(store, args)).isEmpty)
-    assert(withIndexOff(accs(SonarMatch.matchGenomes(store, args))).isEmpty)
+    assert(accs(fullScan(store, args)).isEmpty)
     // a remove that matches nothing still rewrites the tables (new listing)
     // and must restamp rather than strand the index
     SonarOps.remove(store, Seq("no-such-accession"))
@@ -411,7 +385,7 @@ class TokenIndexSpec extends SparkSpec {
       "no-op remove rewrites files; the restamp must follow the new listing")
     val mid = MatchArgs(profiles = Seq(Seq(Mid)))
     assert(accs(SonarMatch.matchGenomes(store, mid)) ==
-      withIndexOff(accs(SonarMatch.matchGenomes(store, mid))))
+      accs(fullScan(store, mid)))
   }
 
   test("removing every genome drops the index; empty store matches stay exact") {
@@ -422,7 +396,7 @@ class TokenIndexSpec extends SparkSpec {
     // empty rewrite left part files or not, matches must be exact and empty
     val args = MatchArgs(profiles = Seq(Seq(Rare)))
     assert(accs(SonarMatch.matchGenomes(store, args)).isEmpty)
-    assert(withIndexOff(accs(SonarMatch.matchGenomes(store, args))).isEmpty)
+    assert(accs(fullScan(store, args)).isEmpty)
     assert(accs(SonarMatch.matchGenomes(store, MatchArgs())).isEmpty)
   }
 
@@ -449,6 +423,6 @@ class TokenIndexSpec extends SparkSpec {
     val args = MatchArgs(profiles = Seq(Seq(Rare, Common), Seq(Mid)),
       lineages = Seq("B.1.1.7", "^AY.4"))
     assert(accs(SonarMatch.matchGenomes(store, args)) ==
-      withIndexOff(accs(SonarMatch.matchGenomes(store, args))))
+      accs(fullScan(store, args)))
   }
 }

@@ -905,7 +905,7 @@ class PipelineQueriesSpec extends SparkSpec {
       s"planted-pair recall ${found.size}/${planted.size} below 0.8")
   }
 
-  test("d4c over-budget stop-grams: distributed probe guards before any collect; fail refuses, degrade keeps the hottest grams and stays exactly-verified") {
+  test("d4c over-budget stop-grams: distributed probe guards before any collect; degrade keeps the hottest grams and stays exactly-verified") {
     import spark.implicits._
     // Adversarial corpus: a large vocabulary shared by EVERY doc, so the
     // df > 64 stop-gram set (~1200 grams) dwarfs a tiny broadcast budget.
@@ -937,44 +937,24 @@ class PipelineQueriesSpec extends SparkSpec {
       if inter * 5 >= uni * 3
     } yield (a, b, 1000000L * inter / uni)).toSet
     assert(truth.size == 50, s"corpus design broke: ${truth.size} true pairs")
-    try {
-      spark.conf.set("spark.graft.d4c.stopGramBudget", "10")
-      spark.conf.set("spark.graft.d4c.overCapMode", "fail")
-      val e = intercept[IllegalArgumentException] {
-        PipelineQueries.d4cCore(spark, docs).collect()
-      }
-      assert(e.getMessage.contains("stop-gram") && e.getMessage.contains("degrade"))
-      spark.conf.set("spark.graft.d4c.overCapMode", "degrade")
-      val degraded = PipelineQueries.d4cCore(spark, docs).collect()
+    def pairs(budget: Int): Set[(Long, Long, Long)] =
+      PipelineQueries.d4cCore(spark, docs, stopGramBudget = budget).collect()
         .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"),
           r.getAs[Long]("jaccard_ppm"))).toSet
-      // exactness survives the degrade: every emitted pair is in the
-      // brute-force truth set WITH the exact ppm (the verify is unchanged)
-      assert(degraded.subsetOf(truth),
-        s"degrade emitted unverified pairs: ${degraded.diff(truth).take(3)}")
-      // and the recall delta vs the un-degraded run is measured, not guessed
-      spark.conf.set("spark.graft.d4c.stopGramBudget",
-        PipelineQueries.D4cStopGramBudgetDefault.toString)
-      val full = PipelineQueries.d4cCore(spark, docs).collect()
-        .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"),
-          r.getAs[Long]("jaccard_ppm"))).toSet
-      assert(full.subsetOf(truth))
-      info(s"d4c recall: degraded ${degraded.size}/${truth.size}, " +
-        s"full ${full.size}/${truth.size} (budget 10 vs default)")
-      // the degrade must still be a useful operator, not a stub: it keeps
-      // the majority of the true pairs on this corpus
-      assert(degraded.size * 2 >= truth.size,
-        s"degraded recall collapsed: ${degraded.size}/${truth.size}")
-      // conf validation: notation rejected loudly
-      spark.conf.set("spark.graft.d4c.stopGramBudget", "1e7")
-      val e2 = intercept[IllegalArgumentException] {
-        PipelineQueries.d4cCore(spark, docs).collect()
-      }
-      assert(e2.getMessage.contains("stopGramBudget"))
-    } finally {
-      spark.conf.unset("spark.graft.d4c.stopGramBudget")
-      spark.conf.unset("spark.graft.d4c.overCapMode")
-    }
+    val degraded = pairs(10)
+    // exactness survives the degrade: every emitted pair is in the
+    // brute-force truth set WITH the exact ppm (the verify is unchanged)
+    assert(degraded.subsetOf(truth),
+      s"degrade emitted unverified pairs: ${degraded.diff(truth).take(3)}")
+    // and the recall delta vs the un-degraded run is measured, not guessed
+    val full = pairs(PipelineQueries.D4cStopGramBudget)
+    assert(full.subsetOf(truth))
+    info(s"d4c recall: degraded ${degraded.size}/${truth.size}, " +
+      s"full ${full.size}/${truth.size} (budget 10 vs default)")
+    // the degrade must still be a useful operator, not a stub: it keeps
+    // the majority of the true pairs on this corpus
+    assert(degraded.size * 2 >= truth.size,
+      s"degraded recall collapsed: ${degraded.size}/${truth.size}")
   }
 
   test("d6's union-find and label-propagation paths agree on random graphs") {
@@ -997,25 +977,21 @@ class PipelineQueriesSpec extends SparkSpec {
     }
   }
 
-  test("d6's driver/distributed crossover threshold is a session dial and both branches agree at the boundary") {
-    def run(): Set[(Long, Long, Long)] =
-      PipelineQueries.d6DupClusters(spark, sf).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val conf = "spark.graft.d6.driverEdgeThreshold"
-    assert(PipelineQueries.d6DriverEdgeThreshold(spark) ==
-      PipelineQueries.D6DriverEdgeThresholdDefault)
-    val baseline = run() // default: driver union-find at this corpus size
-    try {
-      // threshold 0 forces every edge past the probe → distributed branch;
-      // a huge threshold pins the driver branch. Same fixpoint either way.
-      spark.conf.set(conf, "0")
-      assert(PipelineQueries.d6DriverEdgeThreshold(spark) == 0)
-      assert(run() == baseline, "distributed branch diverged at threshold 0")
-      spark.conf.set(conf, Int.MaxValue.toString)
-      assert(run() == baseline, "driver branch diverged at max threshold")
-      spark.conf.set(conf, "-1")
-      intercept[IllegalArgumentException](PipelineQueries.d6DriverEdgeThreshold(spark))
-    } finally spark.conf.unset(conf)
+  test("d6's driver and distributed branches agree: the adaptive entry equals the forced-distributed twin") {
+    // d6's directed edges are at most twice (exact-dup edges ≤ docs, plus
+    // simhash pairs); under the threshold the adaptive entry takes the
+    // driver union-find branch, while d6b forces the distributed
+    // label-propagation branch on the same edges. Same fixpoint.
+    val maxEdges = 2 * (graft.Tables.t(spark, sf, "documents").count() +
+      PipelineQueries.d3bSimhashPairs(spark, sf).count())
+    assert(maxEdges <= PipelineQueries.D6DriverEdgeThreshold,
+      s"$maxEdges edges could exceed the threshold: d6 might not take the driver branch")
+    def run(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val driver = run(PipelineQueries.d6DupClusters(spark, sf))
+    assert(driver.nonEmpty)
+    assert(run(PipelineQueries.d6bDupClustersDist(spark, sf)) == driver,
+      "distributed branch diverged from the driver branch")
   }
 
   test("a8s HLL estimate lands within 5% of the exact distinct count") {
