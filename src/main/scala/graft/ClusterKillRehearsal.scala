@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** Executor-LOSS rehearsal: run the iterative / checkpoint-heavy queries
@@ -17,7 +18,9 @@ import org.apache.spark.sql.SparkSession
   *     three kill points (¼, ½, ¾ of the measured warm wall), so the loss
   *     lands before, during, and after the bulk of the checkpoint traffic.
   *  B. NEGATIVE CONTROL: all dials OFF, 2 executors, one kill — the
-  *     un-replicated localCheckpoint blocks on the dead executor are
+  *     executor holding a block of d6b's checkpointed edge list is killed
+  *     at the next job start (a scheduler event, not a wall-clock
+  *     fraction); the un-replicated block is
   *     unrecoverable by construction, so the run MUST fail (that failure
   *     is the proof the replicated dial is load-bearing, not decorative).
   *  C. `reliable` dial (shared-storage checkpoint every 2 rounds), 3
@@ -78,6 +81,39 @@ object ClusterKillRehearsal {
     t.setDaemon(true)
     t.start()
     def join(ms: Long): Unit = t.join(ms)
+  }
+
+  /** Phase B's trigger, taken from the scheduler instead of the wall clock:
+    * once a second RDD has been checkpointed, the executor holding a block
+    * of the latest one is killed at the next job start. In d6b that RDD is
+    * the edge list, which every later round reads, and the block is the
+    * only copy of its partition.
+    */
+  private final class CheckpointHolderKiller(s: SparkSession) extends SparkListener {
+    val killedAtNs = new java.util.concurrent.atomic.AtomicLong(0)
+    private val sc = s.sparkContext
+    // executor id → pid, probed before the run: a probe mid-query would
+    // queue behind the query's tasks
+    private val pids = sc.range(0, 8, 1, 8).map(_ => org.apache.spark.SparkEnv.get.executorId ->
+      java.lang.management.ManagementFactory.getRuntimeMXBean.getName.split("@")(0)).collect().toMap
+    @volatile private var holders = Vector.empty[(Int, String)] // (rdd id, executor id)
+
+    override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit = {
+      val i = e.blockUpdatedInfo
+      if (i.storageLevel.isValid)
+        i.blockId.asRDDId.foreach(b => holders :+= (b.rddId -> i.blockManagerId.executorId))
+    }
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = if (killedAtNs.get == 0) {
+      val checkpointed = sc.getPersistentRDDs.filter(_._2.isCheckpointed).keySet
+      val held = holders.filter { case (rdd, exec) => checkpointed(rdd) && pids.contains(exec) }
+      if (held.map(_._1).distinct.size >= 2) held.lastOption
+        .foreach { case (rdd, exec) =>
+          println(s"KILL executor $exec (pid ${pids(exec)}) holding checkpointed rdd $rdd at job ${e.jobId}")
+          new ProcessBuilder("kill", "-9", pids(exec)).inheritIO().start().waitFor()
+          killedAtNs.set(System.nanoTime())
+        }
+    }
   }
 
   private def awaitExecutors(s: SparkSession, n: Int): Unit = {
@@ -173,21 +209,19 @@ object ClusterKillRehearsal {
       val clusterB = ClusterHarness.clusterSession(s"graft-kill-control-$attempt",
         executors = 2, coresPerExec = 2, memMb = memMb, extraConf = retryConf)
       try {
+        awaitExecutors(clusterB, 2) // a loaded box can register the second late
         ClusterHarness.requireMultiJvm(clusterB)
         digestOf(SparkEntry.queries(controlQuery)(clusterB, sfDir)) // codegen warm
-        val t0 = System.nanoTime()
-        digestOf(SparkEntry.queries(controlQuery)(clusterB, sfDir)) // steady wall
-        val wallMs = (System.nanoTime() - t0) / 1000000
-        // sweep the kill point across attempts: the lethal window is "after
-        // a checkpoint write, before its last read", which moves with round
-        // timing — a fixed fraction can keep missing it
-        val frac = 0.2 + 0.15 * (attempt - 1)
-        val killer = new Killer(clusterB, math.max(100L, (wallMs * frac).toLong), count = 1)
+        // the lethal window is "after a checkpoint write, before its last
+        // read": a wall-clock fraction kept missing it (five misses in a
+        // row on unchanged code), so the scheduler's own events place it
+        val killer = new CheckpointHolderKiller(clusterB)
+        clusterB.sparkContext.addSparkListener(killer)
         val got =
           try Right(digestOf(SparkEntry.queries(controlQuery)(clusterB, sfDir)))
           catch { case e: Throwable => Left(e.getClass.getSimpleName) }
+          finally clusterB.sparkContext.removeSparkListener(killer)
         val endNs = System.nanoTime()
-        killer.join(30000)
         val landedMidFlight = killer.killedAtNs.get > 0 && killer.killedAtNs.get < endNs
         got match {
           // a failure only counts as the control dying FROM THE KILL when
@@ -196,13 +230,13 @@ object ClusterKillRehearsal {
           // post-completion must not validate the negative control
           case Left(err) if landedMidFlight =>
             controlDied = true
-            println(s"ok   B control died as predicted without the dial ($err, kill@$frac)")
+            println(s"ok   B control died as predicted without the dial ($err)")
           case Left(err) =>
             println(s"B    control attempt $attempt failed but kill landed " +
-              s"post-completion ($err, kill@$frac) — not evidence; retrying")
+              s"post-completion ($err) — not evidence; retrying")
           case Right(_) =>
             println(s"B    control attempt $attempt survived " +
-              s"(kill@$frac landed ${if (landedMidFlight) "mid-flight" else "post-completion"}) — retrying")
+              s"(kill ${if (landedMidFlight) "landed mid-flight" else "never fired"}) — retrying")
         }
       } finally clusterB.stop()
       SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()

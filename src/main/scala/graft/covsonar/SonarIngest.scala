@@ -225,6 +225,8 @@ object SonarIngest {
     // merge will simply find no META and skip.
     val preIdxSig = scala.util.Try(
       graft.Tables.listingSignature(spark, store.tableLocation("profile"))).getOrElse("")
+    // the bridge appends need no dedup: processed rows are unique per
+    // seqhash and each carries distinct varids (SonarBridgeSpec)
     locally {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global
@@ -235,12 +237,12 @@ object SonarIngest {
         Future {
           appendNewDimRows(store, "dna",
             dnaRows.select("varid", "start", "end", "ref", "alt"))
-          store.append("sequence2dna", dnaRows.select("seqhash", "varid").dropDuplicates())
+          store.append("sequence2dna", dnaRows.select("seqhash", "varid"))
         },
         Future {
           appendNewDimRows(store, "prot",
             protRows.select("varid", "protein", "locus", "start", "end", "ref", "alt"))
-          store.append("sequence2prot", protRows.select("seqhash", "varid").dropDuplicates())
+          store.append("sequence2prot", protRows.select("seqhash", "varid"))
         })), Duration.Inf)
     }
 

@@ -443,7 +443,6 @@ object PipelineQueries {
         }
       }
       .toDF("doc_id", "o")
-      .lossTolerantCheckpoint() // read twice (true counts + hit join)
     val nTrue = truePairs.groupBy("doc_id").agg(count(lit(1)).as("n_true"))
     val hits = truePairs.join(candNorm, Seq("doc_id", "o"))
       .groupBy("doc_id").agg(count(lit(1)).as("n_hit"))
@@ -838,17 +837,6 @@ object PipelineQueries {
   def d4cJaccardBanded(s: SparkSession, dir: String): DataFrame =
     d4cCore(s, heapsViewDocs(s, dir))
 
-  /** Plan-inspection probes: the same frames WITHOUT the eager result
-    * checkpoint, so PlanQualitySpec's no-product asserts see the real
-    * join structure instead of a checkpoint scan.
-    */
-  private[graft] def d4bPlanProbe(s: SparkSession, dir: String): DataFrame =
-    d4Core(s, heapsViewDocs(s, dir), forcePrefixPath = true,
-      knownDocs = Some(graft.Tables.rowCount(s, s"$dir/documents.parquet")),
-      materialize = false)
-  private[graft] def d4cPlanProbe(s: SparkSession, dir: String): DataFrame =
-    d4cCore(s, heapsViewDocs(s, dir), materialize = false)
-
   /** Doc-frequency cap above which a 4-gram is a STOP-GRAM for d4c's
     * MinHash input: carrying no identity, it only poisons signature slots
     * (see the pass-2 comment). 64 keeps every class-salted gram (class
@@ -865,7 +853,7 @@ object PipelineQueries {
   private[queries] val D4cStopGramBudget: Int = 1 << 24
 
   private[queries] def d4cCore(s: SparkSession, docs: DataFrame,
-      materialize: Boolean = true, stopGramBudget: Int = D4cStopGramBudget): DataFrame = {
+      stopGramBudget: Int = D4cStopGramBudget): DataFrame = {
     import s.implicits._
     // Pass 1: distinct char-4-grams per doc (d4's gram rule exactly, in
     // d4's packed-long representation — [[packedGrams]], bijective),
@@ -1011,13 +999,9 @@ object PipelineQueries {
       .orderBy("doc_a", "doc_b")
     // same cache discipline as d4Core: materialize the output-sized result,
     // release the data-sized gram/signature cache before returning
-    // (materialize=false = PlanQualitySpec's plan-inspection hook)
-    if (!materialize) { g.unpersist(blocking = false); out }
-    else {
-      val res = out.lossTolerantCheckpoint()
-      g.unpersist(blocking = false)
-      res
-    }
+    val res = out.lossTolerantCheckpoint()
+    g.unpersist(blocking = false)
+    res
   }
 
   /** A Heaps-law view of `documents`, identical in Spark and DuckDB: every
@@ -1196,8 +1180,7 @@ object PipelineQueries {
       knownDocs = Some(graft.Tables.rowCount(s, s"$dir/documents.parquet")))
 
   private def d4Core(s: SparkSession, docs: DataFrame,
-      forcePrefixPath: Boolean, knownDocs: Option[Long] = None,
-      materialize: Boolean = true): DataFrame = {
+      forcePrefixPath: Boolean, knownDocs: Option[Long] = None): DataFrame = {
     import s.implicits._
     // Distinct char-4-grams per doc in one typed pass, PACKED to longs
     // ([[packedGrams]] — bijective, so every downstream count/intersection
@@ -1283,24 +1266,17 @@ object PipelineQueries {
     // call in one session leaves an InMemoryRelation in the CacheManager,
     // accumulating storage-memory pressure across a long-lived application.
     // localCheckpoint blocks (unlike persist) are reclaimed by the
-    // ContextCleaner once the returned frame goes out of scope.
-    // materialize=false is the PLAN-INSPECTION hook (PlanQualitySpec): a
-    // checkpointed result's executedPlan is just the RDD scan, which would
-    // make the no-product assert vacuously true. The gram cache is released
-    // on THIS path too (the probe reads the plan, not the data; executing
-    // the returned frame recomputes without the cache — correct, slower).
-    // Cost: one materialization of the OUTPUT (pairs). On the templated
-    // sf1 corpus — 35% of all cross-copy pairs qualify, 17M rows — that
+    // ContextCleaner once the returned frame goes out of scope. The
+    // checkpoint runs as its own SQL execution, so its plan (the join
+    // structure) is what `PlanDump.executions` captures. Cost: one
+    // materialization of the OUTPUT (pairs). On the templated sf1 corpus — 35% of all cross-copy pairs qualify, 17M rows — that
     // is measurably ~+12 s, but any consumer of a 17M-row result pays
     // that once anyway, and the pre-fix alternative recomputed the whole
     // gram pipeline per downstream action while leaking the cached gram
     // table. Real corpora have output ≪ input and pay ~nothing.
-    if (!materialize) { g.unpersist(blocking = false); result }
-    else {
-      val out = result.lossTolerantCheckpoint()
-      g.unpersist(blocking = false)
-      out
-    }
+    val out = result.lossTolerantCheckpoint()
+    g.unpersist(blocking = false)
+    out
   }
 
   /** Small-vocabulary path: per-lang gram dictionary → each document becomes
@@ -1621,12 +1597,10 @@ object PipelineQueries {
     // fixpoint.
     val labels: DataFrame = {
       import s.implicits._
-      if (forceDistributed) propagateLabels(withCanon, edges0.lossTolerantCheckpoint())
-      else {
-        val probe = edges0.limit(D6DriverEdgeThreshold + 1).as[(Long, Long)].collect()
-        if (probe.length <= D6DriverEdgeThreshold) unionFindAssign(s, dir, probe)
-        else propagateLabels(withCanon, edges0.lossTolerantCheckpoint())
-      }
+      val probe = if (forceDistributed) None
+        else Some(edges0.limit(D6DriverEdgeThreshold + 1).as[(Long, Long)].collect())
+      probe.filter(_.length <= D6DriverEdgeThreshold).map(unionFindAssign(s, dir, _))
+        .getOrElse(propagateLabels(withCanon, edges0.lossTolerantCheckpoint()))
     }
 
     labels
@@ -3702,9 +3676,11 @@ object PipelineQueries {
           "cast(conv(substring(md5(concat_ws(' ', w[i], w[i+1])),1,15),16,10) as bigint))"))
         .as("hk"))
       .lossTolerantCheckpoint()
-    // the model is vocabulary-sized and read three times (hot pick, anti
-    // set, cold join) — materialize it too instead of re-aggregating
-    val model = occ.groupBy("hk").agg(count(lit(1)).as("c")).lossTolerantCheckpoint()
+    // the model is read three times (hot pick, anti set, cold join) but
+    // stays lazy: a checkpoint here did not pay at sf0.1 (Bench medians
+    // with/without it 1.62/1.66 s at local[4], parent IQR 0.21 s, and
+    // 1.61/1.33 s at local[32])
+    val model = occ.groupBy("hk").agg(count(lit(1)).as("c"))
     val scored =
       if (hotK == 0) occ.join(model, "hk")
       else {
@@ -4339,7 +4315,9 @@ object PipelineQueries {
       .withColumn("nsq", dotL("features_ppm", "features_ppm"))
       .filter(col("nsq") > 0)
       // both join sides read the features; without this the probe side's
-      // broadcast subtree re-runs the whole decode+pool pipeline
+      // broadcast subtree re-runs the whole decode+pool pipeline (sf0.1
+      // Bench medians without it: +0.05 s at local[4], +0.07 s at
+      // local[32], against a parent IQR of 0.02 s there)
       .lossTolerantCheckpoint()
     val q = feats.filter(col("doc_id") < 10)
       .select(col("doc_id").as("query_id"), col("features_ppm").as("qv"), col("nsq").as("qsq"))
@@ -5261,7 +5239,10 @@ object PipelineQueries {
         expr(s"doc_id div ${batch}L").as("file_id"),
         col("doc_id"),
         expr("cast(conv(substring(md5(text),1,15),16,10) as bigint)").as("hk"))
-      .lossTolerantCheckpoint() // read three times: blooms, probes, truth
+      // read three times: blooms, probes, truth. At sf0.1 Bench's count()
+      // is 0.42 → 0.39 s without it, but a run that consumes every row is
+      // 0.98 → 1.14 s without it (medians, local[4])
+      .lossTolerantCheckpoint()
     val sketches = docs.groupBy("file_id")
       .agg(call_function("graft_bloom_agg", col("hk"), lit(batch * 2)).as("bf"))
       .collect()
@@ -5837,18 +5818,9 @@ object PipelineQueries {
     * data shuffle: the weight join is broadcast, the copy explode is a
     * narrow generate ≤ 5×.
     */
-  def pipe6MixtureExport(s: SparkSession, dir: String): DataFrame =
-    exportManifest(pipe6Resampled(s, dir))
-
-  /** pipe6's pre-export resample plan, exposed so PlanQualitySpec can pin
-    * the broadcast weight join: [[exportManifest]] eagerly
-    * `localCheckpoint()`s the encoded table, so the export's OWN plan
-    * starts at the checkpoint scan and the upstream join is structurally
-    * invisible there — the shape must be asserted on this subplan.
-    */
-  private[graft] def pipe6Resampled(s: SparkSession, dir: String): DataFrame = {
+  def pipe6MixtureExport(s: SparkSession, dir: String): DataFrame = {
     val w = x13MixWeights(s, dir).select("lang", "source", "weight_ppm")
-    t(s, dir, "documents")
+    exportManifest(t(s, dir, "documents")
       .join(broadcast(w), Seq("lang", "source"))
       .withColumn("n_copies", x37Copies)
       .select(expr(s"CASE WHEN doc_id > ${Long.MaxValue / 8}L OR doc_id < 0L " +
@@ -5858,7 +5830,7 @@ object PipelineQueries {
       .select(col("doc_id"), col("text"), explode(expr(
         "CASE WHEN n_copies >= 1 THEN sequence(1, cast(n_copies as int)) " +
           "ELSE array() END")).as("copy"))
-      .select(expr("doc_id * 8 + copy").as("doc_id"), col("text"))
+      .select(expr("doc_id * 8 + copy").as("doc_id"), col("text")))
   }
 
   lazy val pipe6Sql: String = {

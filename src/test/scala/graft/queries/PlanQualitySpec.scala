@@ -1,11 +1,11 @@
 package graft.queries
 
-import graft.SparkSpec
+import graft.{PlanDump, SparkSpec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.NamedExpression
 import org.apache.spark.sql.catalyst.expressions.aggregate.CollectList
-import org.apache.spark.sql.catalyst.plans.logical.Aggregate
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
 
 /** Physical-plan assertions for the headline relational queries — the
   * properties that decide 100 TB behavior: filters reach the parquet scans,
@@ -16,6 +16,17 @@ class PlanQualitySpec extends SparkSpec {
 
   private def plan(df: DataFrame): String =
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+
+  /** Every SQL execution the registered entry runs, its result consumed. */
+  private def executions(entry: String): Seq[QueryExecution] =
+    PlanDump.executions(spark)(graft.SparkEntry.queries(entry)(spark, sf))
+
+  /** An execution's physical plan as planned and as AQE finally ran it: a
+    * join over an empty side leaves no trace in the final plan, but its
+    * planned shape is still the contract.
+    */
+  private def shape(qe: QueryExecution): String =
+    qe.sparkPlan.treeString + "\n" + PlanDump.plan(qe)
 
   test("q1: date filter pushes into the lineitem scan; scan is pruned") {
     val p = plan(RelationalQueries.q1PricingSummary(spark, sf))
@@ -54,30 +65,36 @@ class PlanQualitySpec extends SparkSpec {
     // oriented edge key, d6b's per-round propagation on the edge list — a
     // cartesian fallback in any of them silently reintroduces exactly the
     // O(n²) the twin was registered to disprove.
-    // d4b/d4c go through their plan PROBES: the registered entries
-    // checkpoint their result (cache-release discipline), which would make
-    // this assert vacuous — the probe is the same frame unmaterialized
+    // d4b/d4c checkpoint their result while they are built (cache-release
+    // discipline), so their returned frames start at a checkpoint scan:
+    // their join structure is pinned on the executions the registered
+    // entries run, the result checkpoint among them
     Seq("d5b" -> PipelineQueries.d5bEmbeddingNnScaled(spark, sf),
-        "d4b" -> PipelineQueries.d4bPlanProbe(spark, sf),
-        "d4c" -> PipelineQueries.d4cPlanProbe(spark, sf),
         "g2b" -> PipelineQueries.g2bTrianglesKeyed(spark, sf),
         "d6b" -> PipelineQueries.d6bDupClustersDist(spark, sf)).foreach { case (name, df) =>
       val p = plan(df)
       assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
         s"$name degenerated to a product join")
     }
-    // the d4b/d4c verify streams both gram arrays through two equi-joins;
-    // regrouping them per candidate pair would buffer every pair's arrays
-    // in aggregation state
-    Seq("d4b" -> PipelineQueries.d4bPlanProbe(spark, sf),
-        "d4c" -> PipelineQueries.d4cPlanProbe(spark, sf)).foreach { case (name, df) =>
-      val pairCollects = df.queryExecution.optimizedPlan.collect {
-        case a: Aggregate if a.groupingExpressions.collect { case e: NamedExpression => e.name }
-            .toSet == Set("doc_a", "doc_b") &&
-          a.aggregateExpressions.exists(_.find(_.isInstanceOf[CollectList]).nonEmpty) => a
-      }
-      assert(pairCollects.isEmpty, s"$name collects gram arrays per candidate pair:\n" +
-        pairCollects.mkString("\n"))
+    Seq("d4b" -> "d4b_jaccard_prefix_path", "d4c" -> "d4c_jaccard_banded").foreach {
+      case (name, entry) =>
+        val qes = executions(entry)
+        qes.map(shape).foreach { p =>
+          assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
+            s"$name degenerated to a product join:\n" + p.take(3000))
+        }
+        // the verify streams both gram arrays through two equi-joins;
+        // regrouping them per candidate pair would buffer every pair's
+        // arrays in aggregation state
+        val pairCollects = qes.flatMap(_.optimizedPlan.collect {
+          case a: Aggregate if a.groupingExpressions.collect { case e: NamedExpression => e.name }
+              .toSet == Set("doc_a", "doc_b") &&
+            a.aggregateExpressions.exists(_.find(_.isInstanceOf[CollectList]).nonEmpty) => a
+        })
+        assert(pairCollects.isEmpty, s"$name collects gram arrays per candidate pair:\n" +
+          pairCollects.mkString("\n"))
+        assert(qes.exists(_.optimizedPlan.find(_.isInstanceOf[Join]).nonEmpty),
+          s"$name: no captured execution holds the verify join")
     }
   }
 
@@ -133,19 +150,18 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("pipe6 pays pipe3's shape: broadcast weight join, no product anywhere") {
-    // exportManifest localCheckpoints the encoded table, so the full
-    // export's plan starts at the checkpoint scan — the weight join shape
-    // must be pinned on the pre-checkpoint resample subplan.
-    val r = plan(PipelineQueries.pipe6Resampled(spark, sf))
-    assert(r.contains("BroadcastHashJoin"),
+    // exportManifest checkpoints the encoded table, so the weight join
+    // runs in that checkpoint's execution and the export's own plan (the
+    // last execution) starts at the checkpoint scan.
+    val plans = executions("pipe6_mixture_export").map(shape)
+    assert(plans.exists(_.contains("BroadcastHashJoin")),
       "the slice-count weight table should broadcast onto the corpus")
-    // x13's weight math inside this subplan crossJoins ONE totals row via
-    // broadcast (a deliberate BroadcastNestedLoopJoin) — only an unkeyed
-    // shuffle product would be a defect here.
-    assert(!r.contains("CartesianProduct"),
-      "a pipe6 resample join degenerated to a shuffled product")
-    val p = plan(PipelineQueries.pipe6MixtureExport(spark, sf))
-    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
+    // x13's weight math crossJoins ONE totals row via broadcast (a
+    // deliberate BroadcastNestedLoopJoin) — only an unkeyed shuffle
+    // product would be a defect there.
+    plans.foreach(p => assert(!p.contains("CartesianProduct"),
+      "a pipe6 resample join degenerated to a shuffled product"))
+    assert(!plans.last.contains("CartesianProduct") && !plans.last.contains("BroadcastNestedLoopJoin"),
       "a pipe6 export join degenerated to a product")
   }
 
