@@ -51,6 +51,9 @@ final class TaskTotals private (sc: SparkContext) extends SparkListener {
     try body finally sc.clearJobGroup()
   }
 
+  /** Unregisters the listener from its SparkContext. */
+  def detach(): Unit = sc.removeSparkListener(this)
+
   /** The totals of `group` so far (all zero if it ran no job). */
   def apply(group: String): Totals = groups.getOrDefault(group, Totals())
 

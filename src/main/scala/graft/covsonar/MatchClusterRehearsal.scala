@@ -43,7 +43,8 @@ object MatchClusterRehearsal {
   private def digests(store: SonarStore, shapes: Seq[(String, MatchArgs)],
       carrierCap: Int = SonarStore.CarrierPlanCap): Map[String, (Long, String)] =
     shapes.map { case (name, margs) =>
-      val df = SonarMatch.matchGenomes(store, margs, carrierCap)
+      // floor 0: the index is priced whatever the store's size
+      val df = SonarMatch.matchGenomes(store, margs, carrierCap, 0L)
       val line = concat_ws("\u0001",
         df.columns.toIndexedSeq.map(c => coalesce(col(c).cast("string"), lit("\u0000"))): _*)
       val agg = df.select(md5(line).as("h"))
@@ -136,17 +137,17 @@ object MatchClusterRehearsal {
         .head().getString(0).stripPrefix("d:")
       val midArgs = MatchArgs(profiles = Seq(Seq(midToken)))
       val groups = SonarMatch.fixXNSearch(midArgs.profiles).map(SonarMatch.makeExplicit)
-      val carriers = TokenIndex.carrierSuperset(store, groups, SonarStore.CarrierPlanCap)
+      val carriers = TokenIndex.carrierSuperset(store, groups, SonarStore.CarrierPlanCap, 0L)
         .map(_.size).getOrElse(-1)
       require(carriers > SonarStore.CarrierPushdownCap,
         s"mid-band probe $midToken resolved $carriers carriers — not in the " +
           s"semi-join band; the measurement would be vacuous")
       val meter = graft.TaskTotals.attach(cluster.sparkContext)
       def timed(label: String, carrierCap: Int): (Double, Long, Long) = {
-        SonarMatch.matchGenomes(store, midArgs, carrierCap).count() // warm
+        SonarMatch.matchGenomes(store, midArgs, carrierCap, 0L).count() // warm
         def once(run: Int): Double = {
           val t = System.nanoTime()
-          meter.within(s"$label#$run")(SonarMatch.matchGenomes(store, midArgs, carrierCap).count())
+          meter.within(s"$label#$run")(SonarMatch.matchGenomes(store, midArgs, carrierCap, 0L).count())
           (System.nanoTime() - t) / 1e9
         }
         val w = math.min(once(1), once(2))

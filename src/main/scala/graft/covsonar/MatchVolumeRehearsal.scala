@@ -18,8 +18,11 @@ import org.apache.spark.sql.functions._
   * matter how they were produced.
   *
   * Run: `sbt "runMain graft.covsonar.MatchVolumeRehearsal [n] [storeDir]"`;
-  * prints per-query wall seconds (min of 2), result rows, and rows/s over
-  * the genome count, plus a plan audit line for the flagship shape.
+  * prints per-query wall seconds (min of 2), result rows, rows/s over the
+  * genome count, bytes read and the plan tier, plus a plan audit line for
+  * the flagship shape. The `indexed`, `merged` and `removed` phases force
+  * the index on (store-size floor 0); the `priced` phase runs at the
+  * default floor, so it shows which tier `match` picks at this size.
   */
 object MatchVolumeRehearsal {
 
@@ -158,34 +161,40 @@ object MatchVolumeRehearsal {
     // scan-volume accounting: task input bytes per measured run
     val meter = graft.TaskTotals.attach(spark.sparkContext)
 
-    // carrierCap 0 skips the token index: the full-scan plan on the same store
-    def runShapes(label: String, carrierCap: Int = SonarStore.CarrierPlanCap)
-        : Map[String, (Long, Double, Long)] = {
+    // carrierCap 0 skips the token index: the full-scan plan on the same
+    // store; minProfileBytes 0 prices the index whatever the store's size
+    def runShapes(label: String, carrierCap: Int = SonarStore.CarrierPlanCap,
+        minProfileBytes: Long = 0L): Map[String, (Long, Double, Long)] = {
+      def run(margs: MatchArgs) =
+        SonarMatch.matchWithPlan(store, margs, carrierCap, minProfileBytes)
       // untimed warm pass: equalize page-cache / writeback state across
       // phases (the phase right after OPTIMIZE otherwise pays the rewrite's
       // cold cache and its timings under-credit the indexed plans)
-      shapes.foreach { case (_, margs) => SonarMatch.matchGenomes(store, margs, carrierCap).count() }
+      shapes.foreach { case (_, margs) => run(margs)._1.count() }
       val timings = shapes.map { case (name, margs) =>
-        def once(run: Int): (Long, Double) = {
+        def once(i: Int): (Long, Double, MatchPlan) = {
           val t = System.nanoTime()
-          val rows = meter.within(s"$label/$name#$run")(
-            SonarMatch.matchGenomes(store, margs, carrierCap).count())
-          (rows, (System.nanoTime() - t) / 1e9)
+          val (rows, plan) = meter.within(s"$label/$name#$i") {
+            val (df, plan) = run(margs)
+            (df.count(), plan)
+          }
+          (rows, (System.nanoTime() - t) / 1e9, plan)
         }
-        val (rows1, s1) = once(1)
-        val (rows2, s2) = once(2)
+        val (rows1, s1, plan) = once(1)
+        val (rows2, s2, _) = once(2)
         require(rows1 == rows2)
-        (name, rows1, math.min(s1, s2))
+        (name, rows1, math.min(s1, s2), plan)
       }
       meter.settle()
-      timings.map { case (name, rows, s) =>
+      timings.map { case (name, rows, s, plan) =>
         val b = math.min(meter(s"$label/$name#1").inputBytes, meter(s"$label/$name#2").inputBytes)
-        println(f"$label $name%-18s $rows%12d $s%10.2f ${nGenomes / s}%12.0f ${b / 1e6}%10.1f MB")
+        println(f"$label $name%-18s $rows%12d $s%10.2f ${nGenomes / s}%12.0f ${b / 1e6}%10.1f MB  " +
+          s"${plan.tier}/${plan.reason}")
         name -> ((rows, s, b))
       }.toMap
     }
 
-    println(f"${"phase+query"}%-28s ${"rows"}%12s ${"sec(min2)"}%10s ${"genomes/s"}%12s ${"read"}%13s")
+    println(f"${"phase+query"}%-28s ${"rows"}%12s ${"sec(min2)"}%10s ${"genomes/s"}%12s ${"read"}%13s  tier/reason")
     val baseline = if (fast) Map.empty[String, (Long, Double, Long)]
       else runShapes("appended ")
 
@@ -196,12 +205,17 @@ object MatchVolumeRehearsal {
 
     val indexed = runShapes("indexed  ")
     val optScan = runShapes("opt-noidx", carrierCap = 0)
+    // the default floor: the tier `match` itself picks at this store size
+    println(f"PRICED profile ${store.tableBytes("profile") / 1e6}%.1f MB on disk, " +
+      f"floor ${SonarStore.IndexMinProfileBytes / 1e6}%.1f MB")
+    val priced = runShapes("priced   ", minProfileBytes = SonarStore.IndexMinProfileBytes)
 
     // rows must agree across all (run) physical plans
     shapes.foreach { case (name, _) =>
       require(baseline.get(name).forall(_._1 == indexed(name)._1) &&
-          indexed(name)._1 == optScan(name)._1,
-        s"$name diverged across plans: ${baseline.get(name).map(_._1)}/${indexed(name)._1}/${optScan(name)._1}")
+          indexed(name)._1 == optScan(name)._1 && priced(name)._1 == optScan(name)._1,
+        s"$name diverged across plans: ${baseline.get(name).map(_._1)}/${indexed(name)._1}/" +
+          s"${optScan(name)._1}/${priced(name)._1}")
     }
     Seq("profile_rare", "profile_ultra", "profile_and").foreach { q =>
       val (_, sIdx, bIdx) = indexed(q)
@@ -213,8 +227,8 @@ object MatchVolumeRehearsal {
     // plan audit: the pruned flagship must push the carrier IN-list into
     // both scans and broadcast the carrier slice (a one-carrier list
     // reaches the scan as an equality: OptimizeIn rewrites a 1-value IN)
-    val prunedPlan = SonarMatch.matchGenomes(store,
-        MatchArgs(profiles = Seq(Seq(Marker)))).queryExecution.executedPlan.toString
+    val prunedPlan = SonarMatch.matchGenomes(store, MatchArgs(profiles = Seq(Seq(Marker))),
+        SonarStore.CarrierPlanCap, 0L).queryExecution.executedPlan.toString
     println(s"PLAN pruned: inPushdown=${prunedPlan.linesIterator.count(l =>
       l.contains("PushedFilters") && (l.contains("In(seqhash") || l.contains("EqualTo(seqhash")))} " +
       s"broadcast=${prunedPlan.contains("BroadcastHashJoin")}")

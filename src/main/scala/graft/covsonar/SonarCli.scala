@@ -122,9 +122,20 @@ object SonarCli {
           ambig = isSet("ambig"),
           frameshifts =
             if (isSet("no_frameshifts")) -1 else if (isSet("only_frameshifts")) 1 else 0)
-        val df = SonarMatch.matchGenomes(store, margs)
-        if (isSet("count")) out.println(df.count())
-        else writeCsv(df, one("out"), tsv = isSet("tsv"), out, err)
+        // the plan line's bytes cover the index probe and the match itself
+        val meter = graft.TaskTotals.attach(spark.sparkContext)
+        try {
+          val plan = meter.within("match") {
+            val (df, plan) = SonarMatch.matchWithPlan(store, margs)
+            if (isSet("count")) out.println(df.count())
+            else writeCsv(df, one("out"), tsv = isSet("tsv"), out, err)
+            plan
+          }
+          if (!isSet("quiet")) {
+            meter.settle()
+            err.println(s"match plan: $plan bytes_scanned=${meter("match").inputBytes}")
+          }
+        } finally meter.detach()
 
       case "restore" =>
         val accs = expandAccessions(all("acc"), all("file")).distinct
@@ -167,8 +178,10 @@ object SonarCli {
         // beyond the reference's report: whether rare-variant matches are
         // currently index-accelerated, and the actionable fix when not
         out.println("token index:                " +
-          (if (TokenIndex.isFresh(store)) "fresh (rare-variant match accelerated)"
-           else "stale or absent (run optimize to rebuild)"))
+          (if (!TokenIndex.isFresh(store)) "stale or absent (run optimize to rebuild)"
+           else if (store.tableBytes("profile") < SonarStore.IndexMinProfileBytes)
+             "fresh, unused: the store is below the index floor (full scans are cheaper)"
+           else "fresh (rare-variant match accelerated)"))
 
       case "optimize" =>
         // tuning knobs beyond the reference's bare VACUUM: file count per

@@ -196,10 +196,15 @@ object SonarIngest {
     val nNewSeqs = processed.count()
 
     // ---- writes (K5) ----
-    // Crash-safety ordering: `sequence` is the dedup sentinel that makes a
-    // retry skip alignment for a seqhash, so it must be appended LAST, and
-    // `genome` only after every per-sequence table (a genome row visible
-    // without its profile would never heal — the retry skips the accession).
+    // Crash-safety ordering: per-sequence tables, then `sequence`, then
+    // `genome`. `sequence` is the dedup sentinel that makes a retry skip
+    // alignment for a seqhash, so it follows every per-sequence table.
+    // `genome` comes last: a retry skips an accession already in `genome`,
+    // so a genome row written before `sequence` would never heal, and a
+    // later accession sharing its seqhash would be aligned again and its
+    // profile and bridge rows appended twice. A crash between `sequence`
+    // and `genome` heals: the retry finds the accessions missing, skips
+    // their alignment through `sequence` and writes `genome`.
     // The five per-sequence appends are mutually independent, so they run as
     // concurrent Spark jobs (all read the same lineage-free checkpoint).
     // On local disk this is time-neutral — the box is CPU-bound — but
@@ -277,8 +282,8 @@ object SonarIngest {
       processed.select(col("seqhash"), col("dna_profile"), col("aa_profile")),
       preIdxSig)
 
-    store.append("genome", genomeRows)
     store.append("sequence", processed.select(col("seqhash")))
+    store.append("genome", genomeRows)
 
     // global metadata updates from add's --source/--lab/--collection flags
     // (sonar.py:536-543, 677-685) apply to every accession in the input

@@ -60,6 +60,40 @@ final case class MatchArgs(
   }
 }
 
+/** The physical plan tier a `match` runs and why it was chosen.
+  *
+  * `tier` is [[MatchPlan.InPushdown]] (carrier IN-list pushed into both
+  * scans), [[MatchPlan.SemiJoin]] (carrier broadcast semi-join) or
+  * [[MatchPlan.FullScan]] (the whole essence join). `carriers` is the
+  * carrier-superset size on the two index tiers. `reason` is
+  * [[MatchPlan.Indexed]] on the index tiers; on the full scan it names the
+  * bail-out that declined the index.
+  */
+final case class MatchPlan(tier: String, carriers: Option[Int], reason: String) {
+  override def toString: String =
+    s"tier=$tier reason=$reason carriers=${carriers.fold("-")(_.toString)}"
+}
+
+object MatchPlan {
+  val InPushdown = "in_pushdown"
+  val SemiJoin = "semi_join"
+  val FullScan = "full_scan"
+
+  val Indexed = "indexed"
+  /** The query has no include profile to prune on. */
+  val NoIncludeProfile = "no_include_profile"
+  /** `profile` is smaller than [[SonarStore.IndexMinProfileBytes]]. */
+  val BelowFloor = "below_floor"
+  /** The token index is stale or absent. */
+  val NoFreshIndex = "no_fresh_index"
+  /** Every cover of some include group touches a hot token. */
+  val HotToken = "hot_token"
+  /** The carrier bound exceeds the carrier cap. */
+  val OverCap = "over_cap"
+  /** The caller passed carrier cap 0: the index is not consulted. */
+  val IndexOff = "index_off"
+}
+
 /** The `match` query builder — covSonar's flagship operation re-expressed as
   * one declarative DataFrame plan over `essence`:
   *
@@ -279,15 +313,25 @@ object SonarMatch {
     * the result for count mode (P8).
     */
   def matchGenomes(store: SonarStore, args0: MatchArgs): DataFrame =
-    matchGenomes(store, args0, SonarStore.CarrierPlanCap)
+    matchWithPlan(store, args0)._1
 
-  /** [[matchGenomes]] with the token-index carrier cap given: carrier sets
-    * up to `carrierCap` take the pruned plan, and `0` skips the index lookup
-    * altogether (the full essence scan). Specs and rehearsals force a plan
-    * tier through it; results are the same for every cap.
+  /** [[matchGenomes]] together with the plan tier it chose. */
+  def matchWithPlan(store: SonarStore, args0: MatchArgs): (DataFrame, MatchPlan) =
+    matchWithPlan(store, args0, SonarStore.CarrierPlanCap, SonarStore.IndexMinProfileBytes)
+
+  /** [[matchGenomes]] with the token-index carrier cap and store-size floor
+    * given: carrier sets up to `carrierCap` take the pruned plan when
+    * `profile` holds at least `minProfileBytes`. Cap `0` skips the index
+    * lookup altogether (the full essence scan); floor `0` prices the index
+    * on any store. Specs and rehearsals force a plan tier through it;
+    * results are the same for every cap and floor.
     */
   private[graft] def matchGenomes(store: SonarStore, args0: MatchArgs,
-      carrierCap: Int): DataFrame = {
+      carrierCap: Int, minProfileBytes: Long): DataFrame =
+    matchWithPlan(store, args0, carrierCap, minProfileBytes)._1
+
+  private[graft] def matchWithPlan(store: SonarStore, args0: MatchArgs,
+      carrierCap: Int, minProfileBytes: Long): (DataFrame, MatchPlan) = {
     val args = args0.normalized
 
     // R1: token validation
@@ -360,17 +404,21 @@ object SonarMatch {
     })
 
     // Token-index data skipping (exact-safe): for include-profile queries
-    // with a fresh index, resolve the carrier-seqhash superset and match
-    // over that slice instead of scanning every profile row; the predicate
-    // conjunction below is applied unchanged on top, so results are
-    // byte-identical with the index on, stale, or absent.
-    val base =
-      (if (carrierCap > 0 && includeGroups.nonEmpty)
-        TokenIndex.carrierSuperset(store, includeGroups, carrierCap)
-      else None) match {
-        case Some(carriers) => store.essenceForSeqhashes(carriers)
-        case None => store.essence
-      }
+    // with a fresh index on a store above the size floor, resolve the
+    // carrier-seqhash superset and match over that slice instead of
+    // scanning every profile row; the predicate conjunction below is
+    // applied unchanged on top, so results are byte-identical on every tier.
+    val carriers =
+      if (includeGroups.isEmpty) Left(MatchPlan.NoIncludeProfile)
+      else if (carrierCap <= 0) Left(MatchPlan.IndexOff)
+      else TokenIndex.lookup(store, includeGroups, carrierCap, minProfileBytes)
+    val (base, plan) = carriers match {
+      case Right(cs) =>
+        val tier =
+          if (cs.size <= SonarStore.CarrierPushdownCap) MatchPlan.InPushdown else MatchPlan.SemiJoin
+        (store.essenceForSeqhashes(cs), MatchPlan(tier, Some(cs.size), MatchPlan.Indexed))
+      case Left(reason) => (store.essence, MatchPlan(MatchPlan.FullScan, None, reason))
+    }
 
     val filtered = conds.result().foldLeft(base)((df, c) => df.filter(c))
 
@@ -381,11 +429,11 @@ object SonarMatch {
       if (args.ambig) col("aa_profile")
       else filterAmbigCol("aa_profile", Genetics.iupacAaExplicit)
 
-    filtered.select(SonarStore.essenceColumns.map {
+    (filtered.select(SonarStore.essenceColumns.map {
       case "dna_profile" => array_join(dnaOut, " ").as("dna_profile")
       case "aa_profile" => array_join(aaOut, " ").as("aa_profile")
       case "fs_profile" => array_join(col("fs_profile"), " ").as("fs_profile")
       case c => col(c)
-    }: _*)
+    }: _*), plan)
   }
 }

@@ -67,6 +67,15 @@ final class SonarStore(val spark: SparkSession, val dir: String) {
     fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet"))
   }
 
+  /** On-disk bytes of a table's parquet files (0 when absent), from one
+    * directory listing: no footer read and no Spark job.
+    */
+  private[covsonar] def tableBytes(name: String): Long = {
+    val p = tablePath(name)
+    if (!fs.exists(p)) 0L
+    else fs.listStatus(p).filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
+  }
+
   /** A table exactly as stored on disk, schema un-coerced — what migrations
     * inspect to decide whether a column rewrite is needed.
     */
@@ -194,6 +203,16 @@ object SonarStore {
     * lookups stop being "rare".
     */
   val CarrierPlanCap = 10000
+
+  /** `profile` tables smaller than this many on-disk bytes skip the token
+    * index: `match` takes the full essence scan. Below it the whole scan
+    * costs less than the index probe plus the pruned plan it buys. Set at
+    * the measured crossover (MatchVolumeRehearsal, SCALING.md): the
+    * geometric mean over its six include-profile shapes of full-scan wall
+    * ÷ indexed wall is 0.90 at 29 MB of profile, 1.01 at 46 MB and
+    * 1.19–1.43 at 88 MB.
+    */
+  val IndexMinProfileBytes: Long = 48L << 20
 
   /** genome columns in essence/view order (lib/db.sqlite:97-119). */
   val metaColumns: Seq[String] = Seq(

@@ -17,7 +17,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * mid-`add` is NOT idempotent: `add` appends `profile`, `sequence2dna` and
   * `sequence2prot` without an anti-join against rows already stored (only
   * the `dna`/`prot` dimension tables are deduplicated), and the `sequence`
-  * sentinel, appended last, is the only dedup key. A crash after the
+  * sentinel, appended after them, is the only dedup key. A crash after the
   * per-sequence appends but before `sequence` therefore leaves their rows
   * in place, the replay appends them again, and `essence` (a plain join)
   * returns each such genome once per copy. State is bounded: the only

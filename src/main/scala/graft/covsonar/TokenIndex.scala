@@ -26,9 +26,12 @@ import org.apache.spark.sql.functions._
   *     re-read — and `SonarOps.remove` re-stamps via [[restamp]] (removal
   *     keeps carriers a superset, so only the freshness stamp moves).
   *
-  * Match-time use (see [[SonarMatch.matchGenomes]]): for include-profile
-  * queries, resolve a *carrier superset* — a seqhash set that provably
-  * contains every matching genome — from the index, and when it is small
+  * Match-time use (see [[SonarMatch.matchWithPlan]]): for include-profile
+  * queries on a store whose `profile` table holds at least
+  * [[SonarStore.IndexMinProfileBytes]] (smaller stores scan faster than
+  * the index probe and the pruned plan cost), resolve a *carrier
+  * superset* — a seqhash set that provably contains every matching
+  * genome — from the index, and when it is small
   * (≤ [[SonarStore.CarrierPlanCap]], 10000), match over the
   * carrier slice instead of the full essence scan
   * ([[SonarStore.essenceForSeqhashes]]): up to
@@ -439,19 +442,31 @@ object TokenIndex {
   }
 
   /** Resolve the carrier-seqhash superset for the include groups, or None
-    * when pruning is unavailable (no/stale index, no effective groups, a
-    * hot token in every cover of some group, or the carrier bound exceeds
-    * `cap` — at that selectivity the full scan is the right plan anyway).
-    * One token-range-pruned index job for the ≤64-token common case
-    * (pricing + fetch together); two for degenerate many-token queries.
+    * when pruning is unavailable or would not pay (see [[lookup]] for the
+    * reasons). `minProfileBytes` is the store-size floor: a `profile` table
+    * smaller than it takes the full scan.
     */
   def carrierSuperset(store: SonarStore, groups: Seq[SonarMatch.ExplicitGroup],
-      cap: Int): Option[Seq[String]] = {
+      cap: Int, minProfileBytes: Long = SonarStore.IndexMinProfileBytes): Option[Seq[String]] =
+    lookup(store, groups, cap, minProfileBytes).toOption
+
+  /** [[carrierSuperset]] with the reason it declined: Left of a
+    * [[MatchPlan]] reason (no include profile, below floor, no fresh index,
+    * hot token, over cap). The bail-outs run cheapest first: the floor is
+    * priced from one listing of `profile` before any META or footer read,
+    * so a store below it pays no Spark job and no file read to decide; the
+    * hot-token check needs only META. One token-range-pruned index job for
+    * the ≤64-token common case (pricing + fetch together); two for
+    * degenerate many-token queries.
+    */
+  private[covsonar] def lookup(store: SonarStore, groups: Seq[SonarMatch.ExplicitGroup],
+      cap: Int, minProfileBytes: Long): Either[String, Seq[String]] = {
     // Mirror profileGroupsCondition: token-less groups drop out of the OR;
     // if ALL groups are token-less there is no include condition to prune on.
     val effective0 = groups.map(coversFor).filter(_.nonEmpty)
-    if (effective0.isEmpty) return None
-    val meta = freshMeta(store).getOrElse(return None)
+    if (effective0.isEmpty) return Left(MatchPlan.NoIncludeProfile)
+    if (store.tableBytes("profile") < minProfileBytes) return Left(MatchPlan.BelowFloor)
+    val meta = freshMeta(store).getOrElse(return Left(MatchPlan.NoFreshIndex))
 
     // Hot-token short-circuit: a cover touching a hot (over-build-cap)
     // token can never be fetched. Dropping those covers driver-side means
@@ -462,7 +477,7 @@ object TokenIndex {
     val effective =
       if (meta.hotOverflow) effective0
       else effective0.map(_.filterNot(_.exists(meta.hotTokens.contains)))
-    if (effective.exists(_.isEmpty)) return None
+    if (effective.exists(_.isEmpty)) return Left(MatchPlan.HotToken)
 
     val spark = store.spark
     val idx = spark.read.parquet(tokensPath(store).toString)
@@ -492,27 +507,27 @@ object TokenIndex {
       cover.forall(t => counts.getOrElse(t, 0L) <= meta.buildCap)
     val chosen = effective.map { covers =>
       val usable = covers.filter(valid)
-      if (usable.isEmpty) return None
+      if (usable.isEmpty) return Left(MatchPlan.HotToken)
       usable.minBy(cost)
     }
     // Σ of per-cover costs over-counts shared carriers — still a sound bound
-    if (chosen.map(cost).sum > cap) return None
+    if (chosen.map(cost).sum > cap) return Left(MatchPlan.OverCap)
 
-    val lookup = chosen.flatten.distinct.filter(counts.contains) // absent → no row, no carriers
-    if (lookup.isEmpty) return Some(Nil)
+    val fetch = chosen.flatten.distinct.filter(counts.contains) // absent → no row, no carriers
+    if (fetch.isEmpty) return Right(Nil)
     val fetched =
-      if (singlePass) rows.filter(r => lookup.contains(r.getString(0)))
+      if (singlePass) rows.filter(r => fetch.contains(r.getString(0)))
         .map(r => r.getString(0) -> r.getSeq[String](2))
-      else idx.filter(col("token").isin(lookup: _*))
+      else idx.filter(col("token").isin(fetch: _*))
         .select("token", "carriers")
         .collect().map(r => r.getString(0) -> r.getSeq[String](1))
     // hard invariant, never silent: every priced-as-fetchable token must
     // come back with its materialized list
     val byToken = fetched.toMap
-    lookup.foreach { t =>
+    fetch.foreach { t =>
       require(byToken.get(t).exists(_ != null),
         s"token index inconsistent for $t — rebuild with SonarOps.optimize")
     }
-    Some(lookup.flatMap(byToken(_)).distinct)
+    Right(fetch.flatMap(byToken(_)).distinct)
   }
 }

@@ -206,10 +206,12 @@ class ClusterModeSpec extends AnyFunSuite with BeforeAndAfterAll {
         MatchArgs(profiles = Seq(Seq(MatchVolumeRehearsal.Marker))), // point lookup
         MatchArgs(profiles = Seq(Seq(MatchVolumeRehearsal.pool(15000)))), // rare
         MatchArgs(profiles = Seq(Seq(MatchVolumeRehearsal.pool(2))))) // hot → full scan
-      shapes.foreach { args =>
-        val indexed = SonarMatch.matchGenomes(store, args)
-          .collect().map(r => ClusterHarness.canonValue(r)).sorted.toSeq
-        val full = SonarMatch.matchGenomes(store, args, 0) // 0: no index lookup
+      shapes.zip(Seq(true, true, false)).foreach { case (args, pruned) =>
+        // floor 0: the index is priced on this small store
+        val (df, plan) = SonarMatch.matchWithPlan(store, args, SonarStore.CarrierPlanCap, 0L)
+        assert((plan.tier != MatchPlan.FullScan) == pruned, s"$plan for $args")
+        val indexed = df.collect().map(r => ClusterHarness.canonValue(r)).sorted.toSeq
+        val full = SonarMatch.matchGenomes(store, args, 0, 0L) // cap 0: no index lookup
           .collect().map(r => ClusterHarness.canonValue(r)).sorted.toSeq
         assert(indexed == full, s"indexed≠full on cluster for $args")
       }

@@ -52,4 +52,27 @@ class SonarBridgeSpec extends SparkSpec {
     }
     assert(store.table("sequence").count() == 15, "3 fixture + 12 mutant sequences expected")
   }
+
+  test("a retried add heals a crash between the sequence and genome appends") {
+    val fasta = s"${Fixtures.dir}/test.fasta"
+    val done = new SonarStore(spark, Files.createTempDirectory("sonar-done").toString)
+    SonarIngest.add(done, SonarIngest.readFasta(spark, fasta))
+    // the state a crash after the `sequence` append leaves: every
+    // per-sequence table and `sequence` written, `genome` not
+    val crashed = new SonarStore(spark, Files.createTempDirectory("sonar-crash").toString)
+    val perSequence = Seq("profile", "dna", "prot", "sequence2dna", "sequence2prot", "sequence")
+    perSequence.foreach(t => crashed.append(t, done.table(t)))
+    assert(!crashed.exists("genome"))
+
+    val report = SonarIngest.add(crashed, SonarIngest.readFasta(spark, fasta))
+    assert(report.genomesAdded == 3 && report.sequencesAdded == 0,
+      s"the retry must write genome and skip alignment: $report")
+    val profiles = crashed.table("profile")
+    assert(profiles.count() == 3 && profiles.select("seqhash").distinct().count() == 3,
+      "one profile row per seqhash")
+    perSequence.foreach { t =>
+      assert(crashed.table(t).count() == done.table(t).count(), s"$t grew on the retry")
+    }
+    assert(SonarMatch.matchGenomes(crashed, MatchArgs()).count() == 3)
+  }
 }

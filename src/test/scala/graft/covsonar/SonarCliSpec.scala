@@ -61,8 +61,11 @@ class SonarCliSpec extends SparkSpec {
   test("add + match --count + empty-match notice") {
     val (_, addErr) = cli("add", "--db", db, "-f", s"${Fixtures.dir}/test.fasta")
     assert(addErr.contains("3 genome(s) added"))
-    val (n, _) = cli("match", "--db", db, "--count")
+    val (n, planErr) = cli("match", "--db", db, "--count")
     assert(n.trim == "3")
+    assert(planErr.linesIterator.exists(_.matches(
+      "match plan: tier=full_scan reason=no_include_profile carriers=- bytes_scanned=[1-9][0-9]*")),
+      planErr)
     val (csv, _) = cli("match", "--db", db, "--acc", "test2")
     val lines = csv.trim.split("\n")
     assert(lines.head.startsWith("accession,description,lab"))
@@ -109,6 +112,17 @@ class SonarCliSpec extends SparkSpec {
     // the rewritten store still matches (flags change layout, never results)
     val (matchOut, _) = cli("match", "--db", db, "--count")
     assert(matchOut.trim.toLong > 0)
+    // the fixture store is far below the index floor: the fresh index is
+    // declined before it is read, and the plan line says so
+    val (c241t, planErr) = cli("match", "--db", db, "-i", "C241T", "--count")
+    assert(c241t.trim.toLong > 0)
+    assert(planErr.linesIterator.exists(_.matches(
+      "match plan: tier=full_scan reason=below_floor carriers=- bytes_scanned=[1-9][0-9]*")),
+      planErr)
+    val (_, quietErr) = cli("match", "--db", db, "-i", "C241T", "--count", "--quiet")
+    assert(!quietErr.contains("match plan:"), quietErr)
+    val (info, _) = cli("info", "--db", db)
+    assert(info.contains("token index:                fresh, unused"), info)
   }
 
   test("store-local lineage closure overrides the bundled map") {

@@ -84,6 +84,15 @@ class SonarEndToEndSpec extends SparkSpec {
 
   private def count(args: MatchArgs): Long = SonarMatch.matchGenomes(store, args).count()
 
+  /** The match through the token index: floor 0 prices the index on this
+    * fixture store, which the default floor sends to the full scan.
+    */
+  private def indexed(args: MatchArgs): DataFrame = {
+    val (df, plan) = SonarMatch.matchWithPlan(store, args, SonarStore.CarrierPlanCap, 0L)
+    assert(plan.tier != MatchPlan.FullScan, s"expected an index tier for $args, got $plan")
+    df
+  }
+
   private val tsvMapping = Map(
     "accession" -> "accessions", "zip" -> "regions", "date" -> "dates",
     "gisaid" -> "gisaid", "ena" -> "ena", "lab" -> "lab", "source" -> "source",
@@ -110,18 +119,18 @@ class SonarEndToEndSpec extends SparkSpec {
   }
 
   test("match 2: date range + C241T (test.sh:48)") {
-    assertMatchesGolden(SonarMatch.matchGenomes(store,
+    assertMatchesGolden(indexed(
       MatchArgs(profiles = Seq(Seq("C241T")), dates = Seq("2021-01-01:2021-01-31"))),
       "expected2.csv")
   }
 
   test("match 3: single variant G1820A (test.sh:58)") {
-    assertMatchesGolden(SonarMatch.matchGenomes(store,
+    assertMatchesGolden(indexed(
       MatchArgs(profiles = Seq(Seq("G1820A")))), "expected2.csv")
   }
 
   test("match 4: include G1820A exclude C1348T (test.sh:68)") {
-    assertMatchesGolden(SonarMatch.matchGenomes(store,
+    assertMatchesGolden(indexed(
       MatchArgs(profiles = Seq(Seq("G1820A")), excludeProfiles = Seq(Seq("C1348T")))),
       "expected2.csv")
   }

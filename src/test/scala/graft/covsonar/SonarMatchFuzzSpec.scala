@@ -142,17 +142,25 @@ class SonarMatchFuzzSpec extends SparkSpec {
     val rnd = new Random(20260816L)
     val (store, gs) = buildStore(rnd, 60)
     // clustered rewrite + token index → include-profile trials take the
-    // carrier-pruned plan; a tiny carrier cap on some trials forces the
-    // fallback path through the same assertions
+    // carrier-pruned plan (store-size floor 0: the default floor sends a
+    // store this small to the full scan); a tiny carrier cap on some
+    // trials forces the fallback path through the same assertions
     SonarOps.optimize(store, maxFilesPerTable = 3)
+    var indexedTrials = 0
     (1 to 40).foreach { trial =>
       val cap = if (trial % 7 == 0) 1 else SonarStore.CarrierPlanCap
       val args = randomArgs(rnd)
-      val got = SonarMatch.matchGenomes(store, args, cap)
-        .select("accession").collect().map(_.getString(0)).toSet
+      val (df, plan) = SonarMatch.matchWithPlan(store, args, cap, 0L)
+      val got = df.select("accession").collect().map(_.getString(0)).toSet
       val want = expected(gs, args)
       assert(got == want,
         s"indexed trial $trial diverged for $args\n  missing: ${want -- got}\n  extra: ${got -- want}")
+      // the index is fresh and the floor is off: only the query itself
+      // (no include profile, a hot token, the carrier cap) can decline it
+      assert(plan.tier != MatchPlan.FullScan || Set(MatchPlan.NoIncludeProfile,
+        MatchPlan.HotToken, MatchPlan.OverCap).contains(plan.reason), s"trial $trial: $plan")
+      if (plan.tier != MatchPlan.FullScan) indexedTrials += 1
     }
+    assert(indexedTrials > 0, "no trial took an index tier")
   }
 }

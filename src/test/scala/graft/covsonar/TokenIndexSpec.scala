@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
 /** The inverted token→seqhash index behind rare-variant match data skipping:
   * build/freshness lifecycle, carrier-superset derivation (AND / search_all
   * OR / mixed groups, cap fallback), exact-safety of the pruned plan against
-  * the full-scan plan, and the physical pushdown (carrier IN list reaching
-  * both parquet scans).
+  * the full-scan plan, the physical pushdown (carrier IN list reaching
+  * both parquet scans) and the store-size floor. These stores are far
+  * below the default floor, so the indexed sides pass floor 0.
   */
 class TokenIndexSpec extends SparkSpec {
 
@@ -51,7 +52,30 @@ class TokenIndexSpec extends SparkSpec {
 
   /** The same match with the index lookup skipped: the full essence scan. */
   private def fullScan(store: SonarStore, args: MatchArgs) =
-    SonarMatch.matchGenomes(store, args, 0)
+    SonarMatch.matchGenomes(store, args, 0, 0L)
+
+  /** The match with the store-size floor off, so the index is priced on
+    * these tiny stores, which the default floor sends to the full scan.
+    */
+  private def forced(store: SonarStore, args: MatchArgs) =
+    SonarMatch.matchWithPlan(store, args, SonarStore.CarrierPlanCap, 0L)
+
+  /** [[forced]], asserting that it took one of the two index tiers. */
+  private def indexed(store: SonarStore, args: MatchArgs) = {
+    val (df, plan) = forced(store, args)
+    assert(plan.tier != MatchPlan.FullScan, s"expected an index tier for $args, got $plan")
+    df
+  }
+
+  /** [[forced]], asserting that the index declined for `reason`. */
+  private def declined(store: SonarStore, args: MatchArgs, reason: String) = {
+    val (df, plan) = forced(store, args)
+    assert(plan == MatchPlan(MatchPlan.FullScan, None, reason), s"for $args")
+    df
+  }
+
+  private def groupsOf(profiles: Seq[Seq[String]]) =
+    SonarMatch.fixXNSearch(profiles).map(SonarMatch.makeExplicit)
 
   test("build → fresh; profile append → stale; rebuild → fresh again") {
     val store = buildStore()
@@ -69,7 +93,7 @@ class TokenIndexSpec extends SparkSpec {
     val store = buildStore()
     SonarOps.optimize(store, 4)
     val groups = SonarMatch.fixXNSearch(Seq(Seq(Rare, Common))).map(SonarMatch.makeExplicit)
-    val carriers = TokenIndex.carrierSuperset(store, groups, cap = 10000).get
+    val carriers = TokenIndex.carrierSuperset(store, groups, cap = 10000, minProfileBytes = 0).get
     // the AND of (3-carrier, 40-carrier) tokens must be priced through the
     // rare one — exactly its 3 carriers, not all 40
     assert(carriers.toSet == Set("hash000", "hash001", "hash002"))
@@ -80,7 +104,7 @@ class TokenIndexSpec extends SparkSpec {
     SonarOps.optimize(store, 4)
     val groups = SonarMatch.fixXNSearch(Seq(Seq(Rare), Seq(Absent)))
       .map(SonarMatch.makeExplicit)
-    val carriers = TokenIndex.carrierSuperset(store, groups, cap = 10000).get
+    val carriers = TokenIndex.carrierSuperset(store, groups, cap = 10000, minProfileBytes = 0).get
     assert(carriers.toSet == Set("hash000", "hash001", "hash002"))
   }
 
@@ -88,11 +112,11 @@ class TokenIndexSpec extends SparkSpec {
     val store = buildStore()
     SonarOps.optimize(store, 4)
     val groups = SonarMatch.fixXNSearch(Seq(Seq(Common))).map(SonarMatch.makeExplicit)
-    assert(TokenIndex.carrierSuperset(store, groups, cap = 10).isEmpty,
+    assert(TokenIndex.carrierSuperset(store, groups, cap = 10, minProfileBytes = 0).isEmpty,
       "40 carriers must exceed a cap of 10")
     // exclude-only queries have no include groups to prune on
     val exOnly = MatchArgs(excludeProfiles = Seq(Seq(Rare)))
-    assert(accs(SonarMatch.matchGenomes(store, exOnly)) ==
+    assert(accs(declined(store, exOnly, MatchPlan.NoIncludeProfile)) ==
       accs(fullScan(store, exOnly)))
     // stale: append then match — must fall back, not mis-prune
     store.append("profile", spark.createDataFrame(
@@ -102,35 +126,65 @@ class TokenIndexSpec extends SparkSpec {
     store.append("genome", store.table("genome").limit(1)
       .withColumn("accession", lit("accXYZ")).withColumn("seqhash", lit("hashXYZ")))
     val args = MatchArgs(profiles = Seq(Seq(Rare)))
-    val got = accs(SonarMatch.matchGenomes(store, args))
+    val got = accs(declined(store, args, MatchPlan.NoFreshIndex))
     assert(got.contains("accXYZ"), s"stale index must not hide new rows: $got")
     assert(got == accs(fullScan(store, args)))
   }
 
+  private val goldenShapes = Seq(
+    MatchArgs(profiles = Seq(Seq(Rare))),
+    MatchArgs(profiles = Seq(Seq(RareAa))),
+    MatchArgs(profiles = Seq(Seq(Rare, RareAa))), // dna+aa AND across levels
+    MatchArgs(profiles = Seq(Seq(Mid), Seq(Rare))), // OR groups
+    MatchArgs(profiles = Seq(Seq(Del))),
+    MatchArgs(profiles = Seq(Seq(Absent))), // empty carrier set → 0 rows
+    MatchArgs(profiles = Seq(Seq(Rare)), excludeProfiles = Seq(Seq(Mid))),
+    MatchArgs(profiles = Seq(Seq(Rare)), lineages = Seq("B.1.1.7"),
+      minCt = Some(20.0)),
+    // trailing-N dna token: search_all OR-mode + ambiguity expansion
+    MatchArgs(profiles = Seq(Seq("A100N"))),
+    // trailing-X aa token
+    MatchArgs(profiles = Seq(Seq("S:N501X"))))
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
   test("pruned results are byte-identical to full-scan across golden shapes") {
     val store = buildStore()
     SonarOps.optimize(store, 4)
-    val shapes = Seq(
-      MatchArgs(profiles = Seq(Seq(Rare))),
-      MatchArgs(profiles = Seq(Seq(RareAa))),
-      MatchArgs(profiles = Seq(Seq(Rare, RareAa))), // dna+aa AND across levels
-      MatchArgs(profiles = Seq(Seq(Mid), Seq(Rare))), // OR groups
-      MatchArgs(profiles = Seq(Seq(Del))),
-      MatchArgs(profiles = Seq(Seq(Absent))), // empty carrier set → 0 rows
-      MatchArgs(profiles = Seq(Seq(Rare)), excludeProfiles = Seq(Seq(Mid))),
-      MatchArgs(profiles = Seq(Seq(Rare)), lineages = Seq("B.1.1.7"),
-        minCt = Some(20.0)),
-      // trailing-N dna token: search_all OR-mode + ambiguity expansion
-      MatchArgs(profiles = Seq(Seq("A100N"))),
-      // trailing-X aa token
-      MatchArgs(profiles = Seq(Seq("S:N501X"))))
-    shapes.foreach { args =>
-      val pruned = SonarMatch.matchGenomes(store, args)
-        .collect().map(_.toString).sorted.toSeq
-      val full = fullScan(store, args).collect().map(_.toString).sorted.toSeq
-      assert(pruned == full, s"pruned≠full for $args")
+    goldenShapes.foreach { args =>
+      assert(rows(indexed(store, args)) == rows(fullScan(store, args)), s"pruned≠full for $args")
     }
-    assert(accs(SonarMatch.matchGenomes(store, MatchArgs(profiles = Seq(Seq(Absent))))).isEmpty)
+    assert(accs(indexed(store, MatchArgs(profiles = Seq(Seq(Absent))))).isEmpty)
+  }
+
+  test("at the default floor a tiny store takes the full scan, priced with zero Spark jobs") {
+    val store = buildStore()
+    SonarOps.optimize(store, 4)
+    assert(TokenIndex.isFresh(store))
+    assert(store.tableBytes("profile") < SonarStore.IndexMinProfileBytes)
+    val args = MatchArgs(profiles = Seq(Seq(Rare)))
+    assert(TokenIndex.carrierSuperset(store, groupsOf(args.profiles), cap = 10000).isEmpty)
+    val meter = graft.TaskTotals.attach(spark.sparkContext)
+    try {
+      val priced = meter.within("priced")(SonarMatch.matchWithPlan(store, args)._2)
+      val forcedPlan = meter.within("forced")(forced(store, args)._2)
+      meter.settle()
+      assert(priced == MatchPlan(MatchPlan.FullScan, None, MatchPlan.BelowFloor))
+      assert(meter("priced").jobs == 0, "pricing below the floor must start no Spark job")
+      // the same plan with the floor off reads the index: one job at least
+      assert(forcedPlan == MatchPlan(MatchPlan.InPushdown, Some(3), MatchPlan.Indexed))
+      assert(meter("forced").jobs >= 1)
+    } finally meter.detach()
+  }
+
+  test("forced and priced results are byte-identical on every golden shape") {
+    val store = buildStore()
+    SonarOps.optimize(store, 4)
+    goldenShapes.foreach { args =>
+      assert(rows(indexed(store, args)) == rows(SonarMatch.matchGenomes(store, args)),
+        s"forced≠priced for $args")
+    }
   }
 
   test("over-pushdown-cap carrier sets take the broadcast semi-join branch, same rows") {
@@ -151,7 +205,7 @@ class TokenIndexSpec extends SparkSpec {
   test("carrier IN list is pushed into both parquet scans") {
     val store = buildStore()
     SonarOps.optimize(store, 4)
-    val plan = SonarMatch.matchGenomes(store, MatchArgs(profiles = Seq(Seq(Rare))))
+    val plan = indexed(store, MatchArgs(profiles = Seq(Seq(Rare))))
       .queryExecution.executedPlan.toString
     val scansWithIn = plan.linesIterator
       .filter(_.contains("PushedFilters"))
@@ -176,7 +230,7 @@ class TokenIndexSpec extends SparkSpec {
       val groups0 = Seq.fill(1 + rnd.nextInt(3))(
         Seq.fill(1 + rnd.nextInt(3))(tokenPool(rnd.nextInt(tokenPool.size))).distinct)
       val explicit = SonarMatch.fixXNSearch(groups0).map(SonarMatch.makeExplicit)
-      TokenIndex.carrierSuperset(store, explicit, cap = 10000).foreach { carriers =>
+      TokenIndex.carrierSuperset(store, explicit, cap = 10000, minProfileBytes = 0).foreach { carriers =>
         // reference evaluation of the include condition per profile row
         def sideOk(have: Set[String], want: Seq[String], searchAllMark: Char): Boolean =
           if (want.isEmpty) true
@@ -222,18 +276,17 @@ class TokenIndexSpec extends SparkSpec {
     // the merged index must resolve the NEW carrier (a stale-superset index
     // would merely not lose rows; the merge must actually gain them)
     val groups = SonarMatch.fixXNSearch(Seq(Seq(Rare))).map(SonarMatch.makeExplicit)
-    val carriers = TokenIndex.carrierSuperset(store, groups, cap = 10000).get
+    val carriers = TokenIndex.carrierSuperset(store, groups, cap = 10000, minProfileBytes = 0).get
     assert(carriers.toSet == Set("hash000", "hash001", "hash002", "hashNEW"))
     val fresh = SonarMatch.fixXNSearch(Seq(Seq("T7777A"))).map(SonarMatch.makeExplicit)
-    assert(TokenIndex.carrierSuperset(store, fresh, cap = 10000).get == Seq("hashNEW"))
+    assert(TokenIndex.carrierSuperset(store, fresh, cap = 10000, minProfileBytes = 0).get ==
+      Seq("hashNEW"))
     // and results stay byte-identical to the full scan
     Seq(MatchArgs(profiles = Seq(Seq(Rare))),
         MatchArgs(profiles = Seq(Seq("T7777A"))),
         MatchArgs(profiles = Seq(Seq(Rare, RareAa)))).foreach { args =>
-      val pruned = SonarMatch.matchGenomes(store, args)
-        .collect().map(_.toString).sorted.toSeq
-      assert(pruned == fullScan(store, args)
-        .collect().map(_.toString).sorted.toSeq, s"pruned≠full after merge for $args")
+      assert(rows(indexed(store, args)) == rows(fullScan(store, args)),
+        s"pruned≠full after merge for $args")
     }
   }
 
@@ -242,8 +295,7 @@ class TokenIndexSpec extends SparkSpec {
     SonarOps.optimize(store, 4)
     TokenIndex.build(store, 4, buildCap = 15) // Mid has 14 ≤ 15 carriers: indexed
     val preSig = profileSig(store)
-    assert(TokenIndex.carrierSuperset(store,
-      SonarMatch.fixXNSearch(Seq(Seq(Mid))).map(SonarMatch.makeExplicit), 10000).isDefined)
+    assert(TokenIndex.carrierSuperset(store, groupsOf(Seq(Seq(Mid))), 10000, 0L).isDefined)
     // two new Mid carriers push it to 16 > 15 → hot after the merge
     appendRows(store, Seq(
       Row("hashM1", Seq(Mid), Seq.empty[String], Seq.empty[String]),
@@ -253,13 +305,12 @@ class TokenIndexSpec extends SparkSpec {
     assert(TokenIndex.isFresh(store))
     assert(TokenIndex.hotTokens(store).contains("d:" + Mid),
       "crossing token must land on the META hot list without a rebuild")
-    assert(TokenIndex.carrierSuperset(store,
-      SonarMatch.fixXNSearch(Seq(Seq(Mid))).map(SonarMatch.makeExplicit), 10000).isEmpty,
+    assert(TokenIndex.carrierSuperset(store, groupsOf(Seq(Seq(Mid))), 10000, 0L).isEmpty,
       "hot token in every cover → no pruning")
     val args = MatchArgs(profiles = Seq(Seq(Mid)))
-    assert(accs(SonarMatch.matchGenomes(store, args)) ==
-      accs(fullScan(store, args)))
-    assert(accs(SonarMatch.matchGenomes(store, args)).contains("acc_hashM1"))
+    val got = accs(declined(store, args, MatchPlan.HotToken))
+    assert(got == accs(fullScan(store, args)))
+    assert(got.contains("acc_hashM1"))
   }
 
   test("merge refuses when the stored index doesn't cover the pre-append table") {
@@ -277,7 +328,7 @@ class TokenIndexSpec extends SparkSpec {
       "stored signature predates sig1 — merge must refuse")
     assert(!TokenIndex.isFresh(store))
     // full-scan fallback still returns everything
-    val got = accs(SonarMatch.matchGenomes(store, MatchArgs(profiles = Seq(Seq(Rare)))))
+    val got = accs(declined(store, MatchArgs(profiles = Seq(Seq(Rare))), MatchPlan.NoFreshIndex))
     assert(got.contains("acc_hashA1") && got.contains("acc_hashA2"))
   }
 
@@ -295,13 +346,12 @@ class TokenIndexSpec extends SparkSpec {
     assert(metaLines.count(_.nonEmpty) == 4 && metaLines.exists(_.startsWith("hot=overflow:")),
       s"overflowed META must be count-only (no token lines): $metaLines")
     // Common (40 carriers > 1) must be rejected by PRICING, not the META list
-    assert(TokenIndex.carrierSuperset(store,
-      SonarMatch.fixXNSearch(Seq(Seq(Common))).map(SonarMatch.makeExplicit), 10000).isEmpty)
+    assert(TokenIndex.carrierSuperset(store, groupsOf(Seq(Seq(Common))), 10000, 0L).isEmpty)
     // and matches stay exact across shapes under the overflowed index
     Seq(MatchArgs(profiles = Seq(Seq(Common))),
         MatchArgs(profiles = Seq(Seq(Rare))),
         MatchArgs(profiles = Seq(Seq(Rare), Seq(Mid)))).foreach { args =>
-      assert(accs(SonarMatch.matchGenomes(store, args)) ==
+      assert(accs(declined(store, args, MatchPlan.HotToken)) ==
         accs(fullScan(store, args)), s"diverged for $args")
     }
     // merge under an overflowed META keeps working and stays overflowed
@@ -311,8 +361,7 @@ class TokenIndexSpec extends SparkSpec {
       store.table("profile").filter(col("seqhash") === "hashOV"), preSig, hotListCap = 2))
     assert(TokenIndex.isFresh(store))
     val args = MatchArgs(profiles = Seq(Seq(Rare)))
-    assert(accs(SonarMatch.matchGenomes(store, args)) ==
-      accs(fullScan(store, args)))
+    assert(accs(forced(store, args)._1) == accs(fullScan(store, args)))
   }
 
   test("SonarIngest.add keeps a fresh index fresh end-to-end (merge wired in)") {
@@ -333,7 +382,7 @@ class TokenIndexSpec extends SparkSpec {
     assert(TokenIndex.isFresh(store),
       "add() must merge the increment instead of leaving the index stale")
     // the ingested genome's variant is immediately index-served
-    val got = SonarMatch.matchGenomes(store, MatchArgs(profiles = Seq(Seq(token))))
+    val got = indexed(store, MatchArgs(profiles = Seq(Seq(token))))
     assert(accs(got).contains("ING1"))
     assert(accs(got) == accs(fullScan(store,
       MatchArgs(profiles = Seq(Seq(token))))))
@@ -351,10 +400,10 @@ class TokenIndexSpec extends SparkSpec {
     val groups = SonarMatch.fixXNSearch(Seq(Seq(Rare))).map(SonarMatch.makeExplicit)
     // carriers stay a SUPERSET (stale hash000/hash001 retained) — exactness
     // comes from the essence scans finding nothing for removed seqhashes
-    val carriers = TokenIndex.carrierSuperset(store, groups, cap = 10000).get
+    val carriers = TokenIndex.carrierSuperset(store, groups, cap = 10000, minProfileBytes = 0).get
     assert(Set("hash000", "hash001", "hash002").subsetOf(carriers.toSet))
     val args = MatchArgs(profiles = Seq(Seq(Rare)))
-    val got = accs(SonarMatch.matchGenomes(store, args))
+    val got = accs(indexed(store, args))
     assert(got == Set("acc2"), s"only the surviving carrier remains: $got")
     assert(got == accs(fullScan(store, args)))
     // and a subsequent APPEND still merges on top of the restamped index
@@ -363,7 +412,7 @@ class TokenIndexSpec extends SparkSpec {
       Row("hashRM1", Seq(Rare), Seq.empty[String], Seq.empty[String])))
     assert(TokenIndex.merge(store,
       store.table("profile").filter(col("seqhash") === "hashRM1"), preSig))
-    val got2 = accs(SonarMatch.matchGenomes(store, args))
+    val got2 = accs(indexed(store, args))
     assert(got2 == Set("acc2", "acc_hashRM1"))
     assert(got2 == accs(fullScan(store, args)))
   }
@@ -376,7 +425,7 @@ class TokenIndexSpec extends SparkSpec {
     SonarOps.remove(store, Seq("acc1", "acc2"))
     assert(TokenIndex.isFresh(store))
     val args = MatchArgs(profiles = Seq(Seq(Rare)))
-    assert(accs(SonarMatch.matchGenomes(store, args)).isEmpty)
+    assert(accs(indexed(store, args)).isEmpty)
     assert(accs(fullScan(store, args)).isEmpty)
     // a remove that matches nothing still rewrites the tables (new listing)
     // and must restamp rather than strand the index
@@ -384,8 +433,7 @@ class TokenIndexSpec extends SparkSpec {
     assert(TokenIndex.isFresh(store),
       "no-op remove rewrites files; the restamp must follow the new listing")
     val mid = MatchArgs(profiles = Seq(Seq(Mid)))
-    assert(accs(SonarMatch.matchGenomes(store, mid)) ==
-      accs(fullScan(store, mid)))
+    assert(accs(indexed(store, mid)) == accs(fullScan(store, mid)))
   }
 
   test("removing every genome drops the index; empty store matches stay exact") {
@@ -395,9 +443,9 @@ class TokenIndexSpec extends SparkSpec {
     // an empty profile table reads as "no index" territory: whether the
     // empty rewrite left part files or not, matches must be exact and empty
     val args = MatchArgs(profiles = Seq(Seq(Rare)))
-    assert(accs(SonarMatch.matchGenomes(store, args)).isEmpty)
+    assert(accs(forced(store, args)._1).isEmpty)
     assert(accs(fullScan(store, args)).isEmpty)
-    assert(accs(SonarMatch.matchGenomes(store, MatchArgs())).isEmpty)
+    assert(accs(forced(store, MatchArgs())._1).isEmpty)
   }
 
   test("remove refuses the restamp when the index was already stale") {
@@ -411,7 +459,7 @@ class TokenIndexSpec extends SparkSpec {
       "restamp over a stale index would stamp fresh over a hole")
     // full-scan fallback still exact
     val args = MatchArgs(profiles = Seq(Seq(Rare)))
-    val got = accs(SonarMatch.matchGenomes(store, args))
+    val got = accs(declined(store, args, MatchPlan.NoFreshIndex))
     assert(got == Set("acc1", "acc2", "acc_hashST"))
   }
 
@@ -422,7 +470,6 @@ class TokenIndexSpec extends SparkSpec {
     SonarOps.optimize(store, 3, rowGroupBytes = Some(1L << 20))
     val args = MatchArgs(profiles = Seq(Seq(Rare, Common), Seq(Mid)),
       lineages = Seq("B.1.1.7", "^AY.4"))
-    assert(accs(SonarMatch.matchGenomes(store, args)) ==
-      accs(fullScan(store, args)))
+    assert(accs(indexed(store, args)) == accs(fullScan(store, args)))
   }
 }
