@@ -44,7 +44,7 @@ object MatchClusterRehearsal {
       carrierCap: Int = SonarStore.CarrierPlanCap): Map[String, (Long, String)] =
     shapes.map { case (name, margs) =>
       // floor 0: the index is priced whatever the store's size
-      val df = SonarMatch.matchGenomes(store, margs, carrierCap, 0L)
+      val df = SonarMatch.matchWithPlan(store, margs, carrierCap, 0L)._1
       val line = concat_ws("\u0001",
         df.columns.toIndexedSeq.map(c => coalesce(col(c).cast("string"), lit("\u0000"))): _*)
       val agg = df.select(md5(line).as("h"))
@@ -144,10 +144,10 @@ object MatchClusterRehearsal {
           s"semi-join band; the measurement would be vacuous")
       val meter = graft.TaskTotals.attach(cluster.sparkContext)
       def timed(label: String, carrierCap: Int): (Double, Long, Long) = {
-        SonarMatch.matchGenomes(store, midArgs, carrierCap, 0L).count() // warm
+        SonarMatch.matchWithPlan(store, midArgs, carrierCap, 0L)._1.count() // warm
         def once(run: Int): Double = {
           val t = System.nanoTime()
-          meter.within(s"$label#$run")(SonarMatch.matchGenomes(store, midArgs, carrierCap, 0L).count())
+          meter.within(s"$label#$run")(SonarMatch.matchWithPlan(store, midArgs, carrierCap, 0L)._1.count())
           (System.nanoTime() - t) / 1e9
         }
         val w = math.min(once(1), once(2))

@@ -227,8 +227,8 @@ object MatchVolumeRehearsal {
     // plan audit: the pruned flagship must push the carrier IN-list into
     // both scans and broadcast the carrier slice (a one-carrier list
     // reaches the scan as an equality: OptimizeIn rewrites a 1-value IN)
-    val prunedPlan = SonarMatch.matchGenomes(store, MatchArgs(profiles = Seq(Seq(Marker))),
-        SonarStore.CarrierPlanCap, 0L).queryExecution.executedPlan.toString
+    val prunedPlan = SonarMatch.matchWithPlan(store, MatchArgs(profiles = Seq(Seq(Marker))),
+        SonarStore.CarrierPlanCap, 0L)._1.queryExecution.executedPlan.toString
     println(s"PLAN pruned: inPushdown=${prunedPlan.linesIterator.count(l =>
       l.contains("PushedFilters") && (l.contains("In(seqhash") || l.contains("EqualTo(seqhash")))} " +
       s"broadcast=${prunedPlan.contains("BroadcastHashJoin")}")

@@ -179,7 +179,7 @@ object SonarCli {
         // currently index-accelerated, and the actionable fix when not
         out.println("token index:                " +
           (if (!TokenIndex.isFresh(store)) "stale or absent (run optimize to rebuild)"
-           else if (store.tableBytes("profile") < SonarStore.IndexMinProfileBytes)
+           else if (TokenIndex.belowFloor(store))
              "fresh, unused: the store is below the index floor (full scans are cheaper)"
            else "fresh (rare-variant match accelerated)"))
 

@@ -319,17 +319,13 @@ object SonarMatch {
   def matchWithPlan(store: SonarStore, args0: MatchArgs): (DataFrame, MatchPlan) =
     matchWithPlan(store, args0, SonarStore.CarrierPlanCap, SonarStore.IndexMinProfileBytes)
 
-  /** [[matchGenomes]] with the token-index carrier cap and store-size floor
-    * given: carrier sets up to `carrierCap` take the pruned plan when
+  /** [[matchWithPlan]] with the token-index carrier cap and store-size
+    * floor given: carrier sets up to `carrierCap` take the pruned plan when
     * `profile` holds at least `minProfileBytes`. Cap `0` skips the index
     * lookup altogether (the full essence scan); floor `0` prices the index
     * on any store. Specs and rehearsals force a plan tier through it;
     * results are the same for every cap and floor.
     */
-  private[graft] def matchGenomes(store: SonarStore, args0: MatchArgs,
-      carrierCap: Int, minProfileBytes: Long): DataFrame =
-    matchWithPlan(store, args0, carrierCap, minProfileBytes)._1
-
   private[graft] def matchWithPlan(store: SonarStore, args0: MatchArgs,
       carrierCap: Int, minProfileBytes: Long): (DataFrame, MatchPlan) = {
     val args = args0.normalized

@@ -290,7 +290,7 @@ object SonarOps {
         // hold: rows/file ÷ estimated groups/file (from the current
         // on-disk bytes, same compression either side of the rewrite).
         val rows = graft.Tables.rowCount(store.spark, store.tableLocation(t))
-        val bytes = tableBytes(store, t)
+        val bytes = store.tableBytes(t)
         val rowsPerFile = math.max(1L, rows / maxFilesPerTable)
         val groupsPerFile = rowGroupBytes match {
           case Some(b) => math.max(1L, (bytes / maxFilesPerTable) / math.max(1L, b))
@@ -307,11 +307,5 @@ object SonarOps {
       }
     }
     TokenIndex.build(store, maxFilesPerTable)
-  }
-
-  private def tableBytes(store: SonarStore, t: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(store.tableLocation(t))
-    val fs = p.getFileSystem(store.spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(p).filter(_.isFile).map(_.getLen).sum
   }
 }

@@ -206,13 +206,14 @@ object SonarStore {
 
   /** `profile` tables smaller than this many on-disk bytes skip the token
     * index: `match` takes the full essence scan. Below it the whole scan
-    * costs less than the index probe plus the pruned plan it buys. Set at
-    * the measured crossover (MatchVolumeRehearsal, SCALING.md): the
-    * geometric mean over its six include-profile shapes of full-scan wall
-    * ÷ indexed wall is 0.90 at 29 MB of profile, 1.01 at 46 MB and
-    * 1.19–1.43 at 88 MB.
+    * costs less than the index probe plus the pruned plan it buys, for
+    * every include-profile shape. Set just above the largest measured
+    * store where no shape wins with the index (MatchVolumeRehearsal,
+    * three runs per size, SCALING.md): at 12.1 MB of profile the point
+    * lookup reads 0.91× the full scan's speed and the other shapes
+    * 0.41–0.64×; at 16.6 MB the point lookup wins (1.09×).
     */
-  val IndexMinProfileBytes: Long = 48L << 20
+  val IndexMinProfileBytes: Long = 12L << 20
 
   /** genome columns in essence/view order (lib/db.sqlite:97-119). */
   val metaColumns: Seq[String] = Seq(

@@ -399,6 +399,14 @@ object TokenIndex {
     */
   def isFresh(store: SonarStore): Boolean = freshMeta(store).isDefined
 
+  /** Whether `profile` is too small for the index to pay: fewer on-disk
+    * bytes than `minProfileBytes`, read from one directory listing (no
+    * Spark job, no footer read). Such a store takes the full scan.
+    */
+  def belowFloor(store: SonarStore,
+      minProfileBytes: Long = SonarStore.IndexMinProfileBytes): Boolean =
+    store.tableBytes("profile") < minProfileBytes
+
   private def freshMeta(store: SonarStore): Option[Meta] =
     storedMeta(store).filter { m =>
       store.exists("profile") &&
@@ -465,7 +473,7 @@ object TokenIndex {
     // if ALL groups are token-less there is no include condition to prune on.
     val effective0 = groups.map(coversFor).filter(_.nonEmpty)
     if (effective0.isEmpty) return Left(MatchPlan.NoIncludeProfile)
-    if (store.tableBytes("profile") < minProfileBytes) return Left(MatchPlan.BelowFloor)
+    if (belowFloor(store, minProfileBytes)) return Left(MatchPlan.BelowFloor)
     val meta = freshMeta(store).getOrElse(return Left(MatchPlan.NoFreshIndex))
 
     // Hot-token short-circuit: a cover touching a hot (over-build-cap)

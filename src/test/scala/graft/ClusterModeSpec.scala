@@ -211,7 +211,7 @@ class ClusterModeSpec extends AnyFunSuite with BeforeAndAfterAll {
         val (df, plan) = SonarMatch.matchWithPlan(store, args, SonarStore.CarrierPlanCap, 0L)
         assert((plan.tier != MatchPlan.FullScan) == pruned, s"$plan for $args")
         val indexed = df.collect().map(r => ClusterHarness.canonValue(r)).sorted.toSeq
-        val full = SonarMatch.matchGenomes(store, args, 0, 0L) // cap 0: no index lookup
+        val full = SonarMatch.matchWithPlan(store, args, 0, 0L)._1 // cap 0: no index lookup
           .collect().map(r => ClusterHarness.canonValue(r)).sorted.toSeq
         assert(indexed == full, s"indexed≠full on cluster for $args")
       }

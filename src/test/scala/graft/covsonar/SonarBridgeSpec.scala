@@ -55,24 +55,24 @@ class SonarBridgeSpec extends SparkSpec {
 
   test("a retried add heals a crash between the sequence and genome appends") {
     val fasta = s"${Fixtures.dir}/test.fasta"
-    val done = new SonarStore(spark, Files.createTempDirectory("sonar-done").toString)
-    SonarIngest.add(done, SonarIngest.readFasta(spark, fasta))
-    // the state a crash after the `sequence` append leaves: every
-    // per-sequence table and `sequence` written, `genome` not
-    val crashed = new SonarStore(spark, Files.createTempDirectory("sonar-crash").toString)
+    val dir = Files.createTempDirectory("sonar-crash")
+    val store = new SonarStore(spark, dir.toString)
+    // crash the `genome` append: a plain file where its table directory goes
+    val blocker = Files.createFile(dir.resolve("genome"))
+    intercept[Exception](SonarIngest.add(store, SonarIngest.readFasta(spark, fasta)))
+    assert(store.table("sequence").count() == 3,
+      "`sequence` must be written before the `genome` append that failed")
     val perSequence = Seq("profile", "dna", "prot", "sequence2dna", "sequence2prot", "sequence")
-    perSequence.foreach(t => crashed.append(t, done.table(t)))
-    assert(!crashed.exists("genome"))
+    val before = perSequence.map(t => t -> store.table(t).count()).toMap
 
-    val report = SonarIngest.add(crashed, SonarIngest.readFasta(spark, fasta))
+    Files.delete(blocker)
+    val report = SonarIngest.add(store, SonarIngest.readFasta(spark, fasta))
     assert(report.genomesAdded == 3 && report.sequencesAdded == 0,
       s"the retry must write genome and skip alignment: $report")
-    val profiles = crashed.table("profile")
+    val profiles = store.table("profile")
     assert(profiles.count() == 3 && profiles.select("seqhash").distinct().count() == 3,
       "one profile row per seqhash")
-    perSequence.foreach { t =>
-      assert(crashed.table(t).count() == done.table(t).count(), s"$t grew on the retry")
-    }
-    assert(SonarMatch.matchGenomes(crashed, MatchArgs()).count() == 3)
+    perSequence.foreach(t => assert(store.table(t).count() == before(t), s"$t grew on the retry"))
+    assert(SonarMatch.matchGenomes(store, MatchArgs()).count() == 3)
   }
 }

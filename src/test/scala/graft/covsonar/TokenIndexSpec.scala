@@ -52,7 +52,7 @@ class TokenIndexSpec extends SparkSpec {
 
   /** The same match with the index lookup skipped: the full essence scan. */
   private def fullScan(store: SonarStore, args: MatchArgs) =
-    SonarMatch.matchGenomes(store, args, 0, 0L)
+    SonarMatch.matchWithPlan(store, args, 0, 0L)._1
 
   /** The match with the store-size floor off, so the index is priced on
     * these tiny stores, which the default floor sends to the full scan.
@@ -162,7 +162,7 @@ class TokenIndexSpec extends SparkSpec {
     val store = buildStore()
     SonarOps.optimize(store, 4)
     assert(TokenIndex.isFresh(store))
-    assert(store.tableBytes("profile") < SonarStore.IndexMinProfileBytes)
+    assert(TokenIndex.belowFloor(store))
     val args = MatchArgs(profiles = Seq(Seq(Rare)))
     assert(TokenIndex.carrierSuperset(store, groupsOf(args.profiles), cap = 10000).isEmpty)
     val meter = graft.TaskTotals.attach(spark.sparkContext)
